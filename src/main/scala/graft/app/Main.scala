@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
@@ -457,21 +457,47 @@ object Main {
 
   /** Incremental ELT (ref main.py:33-139): change scan → normalize →
     * quarantine split → staging merge + audit append → marts refresh.
+    *
+    * Run protocol, one pass per batch:
+    *  1. the change scan, Normalize and the batch dedupe run ONCE: the
+    *     deduped change set is written to the batch scratch dir
+    *     (`<root>/_batch`) with the quality counters observed on that
+    *     write, and the previous versions of its keys (staging ⋉ batch
+    *     ids) are written beside it. Every later output reads those two
+    *     files, never the change scan's plan;
+    *  2. an empty change set over an existing staging layer ends the run
+    *     before any table is written (the reference writes nothing
+    *     either, src/transform.py:200-334);
+    *  3. audit, staging, the four mart states, the five mart presents and
+    *     the web mart's pending months are staged and published as ONE
+    *     journaled group commit: a crash before it leaves every table at
+    *     its pre-run content, a crash inside it rolls forward on reopen,
+    *     so no mart delta is ever applied twice;
+    *  4. the pending month partitions of `mart_web_transactions` are
+    *     rewritten in place from the published staging (`refreshWebMart`).
+    *
+    * `beforeCommit` runs between staging and the group commit (a fault-
+    * injection point for crash tests).
     */
-  def runElt(spark: SparkSession, root: String, source: Option[String], test: Boolean): Unit = {
+  def runElt(spark: SparkSession, root: String, source: Option[String], test: Boolean,
+      beforeCommit: () => Unit = () => ()): Unit = {
+    import graft.marts.{IncrementalDims, IncrementalMart}
     val store = new ParquetTableStore(spark, root)
     require(store.exists("raw"), s"no raw layer under $root — run `load` first")
+    // finish the web-mart refresh of a run that crashed after its commit
+    if (store.exists(WebPending)) refreshWebMart(store, root)
     val raw = store.read("raw")
+    val hasStaging = store.exists("staging")
     val staging0 =
-      if (store.exists("staging")) store.read("staging")
+      if (hasStaging) store.read("staging")
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         graft.schema.Layers.staging)
 
     val changes0 = ChangeScan(raw, staging0, source)
     val changes = if (test) ChangeScan.ordered(changes0, Some(100)) else changes0
 
-    // observe() collects the quality counters during the merge write pass
-    // — no extra jobs over the normalize (ref main.py:96-103 ran separate
+    // observe() collects the quality counters during the batch write —
+    // no extra jobs over the normalize (ref main.py:96-103 ran separate
     // counting queries; a 100 TB normalize can't afford a second pass)
     val obs = org.apache.spark.sql.Observation("quality")
     val normalized = Normalize(changes.select(
@@ -481,90 +507,110 @@ object Main {
       .observe(obs, count(lit(1)).as("n_all"),
         count(when(size(col("validation_warnings")) > 0, 1)).as("n_bad"))
 
-    // Dedupe the batch ONCE, here: raw permits intra-batch duplicate
-    // raw_ids (insertIfAbsent only anti-joins EXISTING rows, unlike the
-    // reference's ON CONFLICT which also suppresses within-batch dupes) —
-    // feeding the raw batch to applyDelta would double-count contributions
-    // and silently drift the mart state from the staging snapshot.
-    val updates = StagingMerge.dedupeBatch(Normalize.toStaging(normalized))
-    val audit = StagingMerge.auditDiff(staging0, updates)
-    val auditOut = if (store.exists("audit")) store.read("audit").unionByName(audit) else audit
-    val merged = StagingMerge.merge(staging0, updates)
-    // audit + mart-state delta derive from the SAME pre-swap snapshot pair
-    // as the merge (SURVEY §7.4 item 3) — and must MATERIALIZE before the
-    // staging swap invalidates staging0's files
-    store.overwrite("audit", auditOut)
-    // monthly P&L is maintained INCREMENTALLY: apply the batch's signed
-    // contributions to the persisted unrounded state instead of
-    // re-aggregating all of staging (IncrementalMartSpec proves equality)
-    val oldRows = staging0.join(updates.select(col("raw_id")), Seq("raw_id"), "left_semi")
-    val martState =
-      if (store.exists("mart_financials_state"))
-        graft.marts.IncrementalMart.applyDelta(
-          store.read("mart_financials_state"), oldRows, updates)
-      else graft.marts.IncrementalMart.initialize(StagingMerge.merge(staging0, updates))
-    store.overwrite("mart_financials_state", martState)
-    // dimension marts carry REF-COUNTED distinct state (DISTINCT is not
-    // abelian; a departing row must not evict a name other rows still use)
-    import graft.marts.IncrementalDims
-    val clientsState =
-      if (store.exists("dim_clients_state"))
-        IncrementalDims.applyClientsDelta(store.read("dim_clients_state"), oldRows, updates)
-      else IncrementalDims.initializeClients(StagingMerge.merge(staging0, updates))
-    store.overwrite("dim_clients_state", clientsState)
-    Seq("category" -> "dim_categories_state", "vendor" -> "dim_vendors_state").foreach {
-      case (src, tbl) =>
-        val st =
-          if (store.exists(tbl))
-            IncrementalDims.applyNamesDelta(store.read(tbl), oldRows, updates, src)
-          else IncrementalDims.initializeNames(StagingMerge.merge(staging0, updates), src)
-        store.overwrite(tbl, st)
+    val batchDir = s"$root/_batch"
+    def materialize(name: String, df: DataFrame): DataFrame = {
+      df.write.mode(SaveMode.Overwrite).parquet(s"$batchDir/$name")
+      spark.read.parquet(s"$batchDir/$name")
     }
-    // month partitions the web mart must rebuild: new OR pre-update row
-    // months (an upsert that moves a row across months rewrites both).
-    // Derived from the pre-swap snapshot pair, so MATERIALIZE (collect)
-    // before the staging swap deletes staging0's files — a daily batch
-    // touches a handful of months, driver-side by construction.
-    val touchedMonths = updates.select(Views.webMonth(col("date")).as("month"))
-      .unionByName(oldRows.select(Views.webMonth(col("date")).as("month")))
-      .distinct().collect().map(_.getString(0)).toSeq
-    store.overwrite("staging", merged)
+    try {
+      // Dedupe the batch ONCE, here: raw permits intra-batch duplicate
+      // raw_ids (insertIfAbsent only anti-joins EXISTING rows, unlike the
+      // reference's ON CONFLICT which also suppresses within-batch dupes)
+      // — feeding the raw batch to applyDelta would double-count
+      // contributions and silently drift the mart state from staging.
+      // The diagnostics column rides along for the quarantine sample.
+      val batch = materialize("updates", StagingMerge.dedupeBatch(normalized))
+      val metrics = obs.get
+      val nAll = metrics("n_all").asInstanceOf[Long]
+      val nBad = metrics("n_bad").asInstanceOf[Long]
+      if (nAll > 0 && nBad * 10 > nAll) { // ref main.py:99 — >10% error alarm
+        System.err.println(s"[graft] WARN: $nBad/$nAll rows carry validation warnings")
+        batch.filter(size(col("validation_warnings")) > 0)
+          .take(5).foreach(r => System.err.println(s"[graft] quarantine sample: $r"))
+      }
+      if (nAll == 0 && hasStaging) {
+        println(s"[graft] run complete: 0 changed rows, ${staging0.count()} staging rows")
+        return
+      }
 
-    val metrics = obs.get
-    val nAll = metrics("n_all").asInstanceOf[Long]
-    val nBad = metrics("n_bad").asInstanceOf[Long]
-    if (nAll > 0 && nBad * 10 > nAll) { // ref main.py:99 — >10% error alarm
-      System.err.println(s"[graft] WARN: $nBad/$nAll rows carry validation warnings")
-      normalized.filter(size(col("validation_warnings")) > 0)
-        .take(5).foreach(r => System.err.println(s"[graft] quarantine sample: $r"))
-    }
+      val updates = Normalize.toStaging(batch)
+      // audit, mart-state deltas and touched months all read this ONE
+      // pre-commit snapshot pair (SURVEY §7.4 item 3)
+      val oldRows =
+        if (hasStaging) materialize("old_rows",
+          staging0.join(updates.select(col("raw_id")), Seq("raw_id"), "left_semi"))
+        else staging0
+      // restricting staging to the batch's keys leaves the raw_id join unchanged
+      val audit = StagingMerge.auditDiff(oldRows, updates)
+      store.stage("audit",
+        if (store.exists("audit")) store.read("audit").unionByName(audit) else audit)
+      val nStaging = org.apache.spark.sql.Observation("staging")
+      val staging = store.stage("staging",
+        StagingMerge.merge(staging0, updates).observe(nStaging, count(lit(1)).as("n")))
 
-    val staging = store.read("staging")
-    store.overwrite("mart_financials",
-      graft.marts.IncrementalMart.present(store.read("mart_financials_state"))
-        .withColumn("last_updated", current_timestamp()))
-    store.overwrite("mart_expenses_by_category", Views.expensesByCategoryV(staging))
-    // row-level query mart: maintained INCREMENTALLY at partition grain —
-    // only touched month partitions are rebuilt from staging; every other
-    // month's files are untouched. Within each partition, Hilbert-cluster
-    // on (day, client-hash) so date ranges AND client lookups both prune
-    // files by min/max stats.
-    val webP = Views.webTransactionsP(staging)
+      // mart states are maintained INCREMENTALLY: the batch's signed
+      // contributions apply to the persisted state instead of
+      // re-aggregating all of staging (IncrementalMartSpec proves
+      // equality); dimension states are REF-COUNTED (DISTINCT is not
+      // abelian — a departing row must not evict a name other rows use)
+      def state(name: String, delta: DataFrame => DataFrame,
+          init: DataFrame => DataFrame): DataFrame =
+        store.stage(name, if (store.exists(name)) delta(store.read(name)) else init(staging))
+      val finState = state("mart_financials_state",
+        IncrementalMart.applyDelta(_, oldRows, updates), IncrementalMart.initialize)
+      val clientsState = state("dim_clients_state",
+        IncrementalDims.applyClientsDelta(_, oldRows, updates), IncrementalDims.initializeClients)
+      def namesState(name: String, src: String): DataFrame = state(name,
+        IncrementalDims.applyNamesDelta(_, oldRows, updates, src),
+        IncrementalDims.initializeNames(_, src))
+      val categoriesState = namesState("dim_categories_state", "category")
+      val vendorsState = namesState("dim_vendors_state", "vendor")
+      store.stage("mart_financials",
+        IncrementalMart.present(finState).withColumn("last_updated", current_timestamp()))
+      store.stage("mart_expenses_by_category", Views.expensesByCategoryV(staging))
+      store.stage("mart_dim_clients", IncrementalDims.presentClients(clientsState))
+      store.stage("mart_dim_categories", IncrementalDims.presentNames(categoriesState))
+      store.stage("mart_dim_vendors", IncrementalDims.presentNames(vendorsState))
+      // month partitions the web mart must rebuild: new OR pre-update row
+      // months (an upsert that moves a row across months rewrites both)
+      store.stage(WebPending, updates.select(Views.webMonth(col("date")).as("month"))
+        .unionByName(oldRows.select(Views.webMonth(col("date")).as("month")))
+        .distinct())
+
+      beforeCommit()
+      store.commitStaged(Seq("audit", "staging", "mart_financials_state",
+        "dim_clients_state", "dim_categories_state", "dim_vendors_state",
+        "mart_financials", "mart_expenses_by_category", "mart_dim_clients",
+        "mart_dim_categories", "mart_dim_vendors", WebPending))
+      refreshWebMart(store, root)
+      println(s"[graft] run complete: $nAll changed rows, ${nStaging.get("n")} staging rows")
+    } finally ParquetTableStore.deleteStoreDir(batchDir)
+  }
+
+  /** Month partitions of `mart_web_transactions` a committed run still
+    * has to rewrite; published with the run's group commit and removed
+    * once the rewrite is done.
+    */
+  private[graft] val WebPending = "web_months_pending"
+
+  /** Row-level query mart, maintained INCREMENTALLY at partition grain:
+    * only the pending month partitions are rebuilt from the published
+    * staging (all of them on the first build); every other month's files
+    * are untouched. Within each partition, Hilbert-cluster on (day,
+    * client-hash) so date ranges AND client lookups both prune files by
+    * min/max stats. Idempotent, so a run that crashed between its commit
+    * and this rewrite is finished by the next run.
+    */
+  private def refreshWebMart(store: ParquetTableStore, root: String): Unit = {
+    val months = store.read(WebPending).collect().map(_.getString(0)).toSeq
+    val webP = Views.webTransactionsP(store.read("staging"))
     val webDelta =
-      if (store.exists("mart_web_transactions"))
-        webP.where(col("month").isin(touchedMonths: _*))
+      if (store.exists("mart_web_transactions")) webP.where(col("month").isin(months: _*))
       else webP
     store.upsertPartitionsClustered("mart_web_transactions", webDelta, "month",
       datediff(col("date"), lit("1970-01-01").cast("date")),
       pmod(xxhash64(col("client")), lit(1L << 20)))
-    store.overwrite("mart_dim_clients",
-      graft.marts.IncrementalDims.presentClients(store.read("dim_clients_state")))
-    store.overwrite("mart_dim_categories",
-      graft.marts.IncrementalDims.presentNames(store.read("dim_categories_state")))
-    store.overwrite("mart_dim_vendors",
-      graft.marts.IncrementalDims.presentNames(store.read("dim_vendors_state")))
-    // count the POST-swap read: `merged`'s plan points at pre-swap files
-    println(s"[graft] run complete: ${nAll} changed rows, ${staging.count()} staging rows")
+    ParquetTableStore.deleteStoreDir(s"$root/$WebPending")
   }
 
   /** Ingest (ref main.py:166-217): headered CSV → payload maps → raw
@@ -591,14 +637,18 @@ object Main {
     val incoming = RawLoader.fromPayloads(rows, source)
     val dups = RawLoader.duplicateHashes(incoming)
     dups.take(5).foreach(r => System.err.println(s"[graft] duplicate content: $r"))
+    // the appended rows are counted on the raw write itself: a count()
+    // afterwards would re-run the CSV read, numbering, hashing and the
+    // id anti-join against all of raw
+    val obs = org.apache.spark.sql.Observation("load")
     val appended =
-      if (store.exists("raw")) RawLoader.insertIfAbsent(store.read("raw"), incoming)
-      else incoming
+      (if (store.exists("raw")) RawLoader.insertIfAbsent(store.read("raw"), incoming)
+       else incoming).observe(obs, count(lit(1)).as("n"))
     if (store.exists("raw")) store.append("raw", appended)
     else store.overwrite("raw", appended)
     RawLoader.archiveCsv(incoming, s"$root/archive",
-      java.time.LocalDate.now().toString)
-    println(s"[graft] loaded ${appended.count()} new rows from $csvPath")
+      java.time.LocalDate.now().toString, source)
+    println(s"[graft] loaded ${obs.get("n")} new rows from $csvPath")
   }
 
   /** Health counts per layer (ref tests/test_db.py shape). */

@@ -93,10 +93,13 @@ object RawLoader {
   }
 
   /** S2 CSV archive sink (ref src/sheets.py:54-59): every ingest batch
-    * archived as headered CSV partitioned by ingest date.
+    * archived as headered CSV under `csv/<ingest date>/<source>`. Loads
+    * APPEND their own part files, so a second load of the same source on
+    * the same day keeps the first load's archive.
     */
-  def archiveCsv(df: DataFrame, archiveRoot: String, ingestDate: String): Unit =
+  def archiveCsv(df: DataFrame, archiveRoot: String, ingestDate: String,
+      source: String): Unit =
     stringifyForExport(df.drop("payload")) // CSV can't carry the map column
-      .write.mode("overwrite").option("header", "true")
-      .csv(s"$archiveRoot/csv/$ingestDate")
+      .write.mode("append").option("header", "true")
+      .csv(s"$archiveRoot/csv/$ingestDate/$source")
 }

@@ -202,23 +202,26 @@ case class IntersectSize(left: Expression, right: Expression)
 
 object IntersectSize {
   /** Per-thread reusable open-addressing scratch. One instance per task
-    * thread; grows monotonically (next power of two ≥ 2× the build-side
-    * cardinality, min 16) and is re-zeroed per row over just the slots in
-    * use — zero steady-state allocation in the verify hot path. Safe to
-    * share across expression instances on a thread: eval is not reentrant
-    * (both operand arrays are fully materialized before nullSafeEval
-    * runs, and nothing inside the loops evaluates another expression).
+    * thread; the array grows monotonically, but each row uses (and
+    * re-clears) only the next power of two ≥ 2× ITS build-side
+    * cardinality, min 16 — one huge row early on a thread does not make
+    * every later small row clear the huge table. Zero steady-state
+    * allocation in the verify hot path. Safe to share across expression
+    * instances on a thread: eval is not reentrant (both operand arrays
+    * are fully materialized before nullSafeEval runs, and nothing inside
+    * the loops evaluates another expression).
     */
   private[functions] final class Scratch {
     var table: Array[Int] = new Array[Int](16)
-    private var cap: Int = 16
-    /** Clear ≥ max(16, 2n) power-of-two slots; return the slot mask. */
+    /** Clear max(16, 2n) rounded up to a power of two slots; return the
+      * slot mask, which keeps every probe inside the cleared prefix.
+      */
     def acquire(n: Int): Int = {
       var need = 16
       while (need < n * 2) need <<= 1
-      if (need > cap) { cap = need; table = new Array[Int](cap) }
-      java.util.Arrays.fill(table, 0, cap, -1)
-      cap - 1
+      if (need > table.length) table = new Array[Int](need)
+      java.util.Arrays.fill(table, 0, need, -1)
+      need - 1
     }
   }
 

@@ -419,9 +419,18 @@ class AppAndSinksSpec extends SparkTestBase {
     assert(r1.getAs[java.math.BigDecimal]("total_rub").doubleValue() == 195103.50)
     val fin = spark.read.parquet(s"$root/mart_financials")
     assert(fin.count() == 2)
-    // re-run: no changes → staging unchanged
-    graft.app.Main.runElt(spark, root, None, test = false)
-    assert(spark.read.parquet(s"$root/staging").count() == 2)
+    // re-load the same CSV, then re-run: an empty change set writes
+    // nothing — every file under the root keeps its name and mtime (no
+    // table, no scratch dir) — and the run still reports itself
+    val reload = new java.io.ByteArrayOutputStream
+    Console.withOut(reload)(graft.app.Main.load(spark, root, csvDir, "sheet_test"))
+    assert(reload.toString.contains("[graft] loaded 0 new rows"), reload.toString)
+    val filesBefore = EltRunSpec.files(root)
+    val rerun = new java.io.ByteArrayOutputStream
+    Console.withOut(rerun)(graft.app.Main.runElt(spark, root, None, test = false))
+    assert(rerun.toString.contains("[graft] run complete: 0 changed rows, 2 staging rows"),
+      rerun.toString)
+    assert(EltRunSpec.files(root) == filesBefore, "an empty batch rewrote files")
 
     // second batch (new rows only — load is insert-if-absent, like the
     // reference's ON CONFLICT DO NOTHING): the incremental mart + dim

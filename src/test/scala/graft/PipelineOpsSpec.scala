@@ -1275,6 +1275,30 @@ class PipelineOpsSpec extends SparkTestBase {
       "SELECT graft_intersect_size(array('a','b'), array('b'))").head().getInt(0) == 1)
   }
 
+  test("intersect_size after a skewed row: small pairs on the same thread stay exact") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, Literal, Size}
+    import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+    import graft.functions.IntersectSize
+    // the per-thread scratch table grows to fit the largest build side it
+    // has seen; every later small row must still probe only the slots it
+    // cleared. Reference sizes come from the interpreted ArrayIntersect.
+    def check(t: DataType, a: Seq[Any], b: Seq[Any]): Unit = {
+      val (la, lb) = (Literal.create(a, ArrayType(t)), Literal.create(b, ArrayType(t)))
+      val want = Size(ArrayIntersect(la, lb), legacySizeOfNull = false).eval()
+      assert(IntersectSize(la, lb).eval() == want, s"$t ${a.size}x${b.size}")
+    }
+    check(LongType, (0L until 200000L), (100000L until 300000L))
+    check(StringType, (0 until 50000).map(i => s"s$i"), (25000 until 75000).map(i => s"s$i"))
+    val rng = new scala.util.Random(11)
+    (1 to 300).foreach { _ =>
+      val (na, nb) = (rng.nextInt(40), rng.nextInt(40))
+      val a = Seq.fill(na)(rng.nextInt(30).toLong)
+      val b = Seq.fill(nb)(rng.nextInt(30).toLong)
+      check(LongType, a, b)
+      check(StringType, a.map(v => s"s$v"), b.map(v => s"s$v"))
+    }
+  }
+
   test("bpe merge step: argmax tie-break, non-overlapping rewrite, exact recount") {
     import graft.operators.Bpe
     // 'abab'×3: pairs ab=6(2 per word), ba=3; plus 'aaaa'×1: aa counts
