@@ -118,7 +118,11 @@ object Bench {
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
     val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
       f""""spread":$spread,"load_start":$loadStart%.2f,"load_end":$loadEnd%.2f,""" +
-      f""""cpus":${Runtime.getRuntime.availableProcessors},""" +
+      // the session's parallelism, not the JVM's core count: a run capped
+      // at 8 cores on a 32-core host records 8
+      f""""cpus":${spark.sparkContext.defaultParallelism},""" +
+      f""""master":"${spark.sparkContext.master}",""" +
+      f""""default_parallelism":${spark.sparkContext.defaultParallelism},""" +
       f""""shuffle_read_mb":${mb(shuffleReadMb)},"shuffle_write_mb":${mb(shuffleWriteMb)},""" +
       f""""spill_mb":${mb(spillMb)},"sf":"$sfDir"}"""
     println(line)

@@ -459,22 +459,33 @@ object Main {
     * quarantine split → staging merge + audit append → marts refresh.
     *
     * Run protocol, one pass per batch:
-    *  1. the change scan, Normalize and the batch dedupe run ONCE: the
-    *     deduped change set is written to the batch scratch dir
+    *  1. the change scan reads only the FRESH raw part files, those the
+    *     consumed set (`ChangeScan.Consumed`) does not list. No fresh file
+    *     over an existing staging layer ends the run before any Spark job:
+    *     the summary line takes the staging count the set records;
+    *  2. the change scan, which picks one row per id, and Normalize run
+    *     ONCE: the change set is written to the batch scratch dir
     *     (`<root>/_batch`) with the quality counters observed on that
     *     write, and the previous versions of its keys (staging ⋉ batch
     *     ids) are written beside it. Every later output reads those two
     *     files, never the change scan's plan;
-    *  2. an empty change set over an existing staging layer ends the run
-    *     before any table is written (the reference writes nothing
-    *     either, src/transform.py:200-334);
-    *  3. audit, staging, the four mart states, the five mart presents and
-    *     the web mart's pending months are staged and published as ONE
-    *     journaled group commit: a crash before it leaves every table at
-    *     its pre-run content, a crash inside it rolls forward on reopen,
-    *     so no mart delta is ever applied twice;
-    *  4. the pending month partitions of `mart_web_transactions` are
+    *  3. an empty change set over an existing staging layer writes no
+    *     table (the reference writes nothing either,
+    *     src/transform.py:200-334); a plain run still publishes the fresh
+    *     files into the consumed set;
+    *  4. audit, staging, the four mart states, the five mart presents, the
+    *     web mart's pending months and the consumed set are staged and
+    *     published as ONE journaled group commit: a crash before it leaves
+    *     every table at its pre-run content (the next run re-reads the
+    *     same fresh files, and the anti-join makes that idempotent), a
+    *     crash inside it rolls forward on reopen, so no mart delta is ever
+    *     applied twice;
+    *  5. the pending month partitions of `mart_web_transactions` are
     *     rewritten in place from the published staging (`refreshWebMart`).
+    *
+    * `--source` and `--test` runs leave fresh rows unapplied (another
+    * source's, or past the 100-row limit), so they never add files to the
+    * consumed set; they only update its staging count.
     *
     * `beforeCommit` runs between staging and the group commit (a fault-
     * injection point for crash tests).
@@ -482,18 +493,29 @@ object Main {
   def runElt(spark: SparkSession, root: String, source: Option[String], test: Boolean,
       beforeCommit: () => Unit = () => ()): Unit = {
     import graft.marts.{IncrementalDims, IncrementalMart}
+    import ChangeScan.Consumed
     val store = new ParquetTableStore(spark, root)
     require(store.exists("raw"), s"no raw layer under $root — run `load` first")
     // finish the web-mart refresh of a run that crashed after its commit
     if (store.exists(WebPending)) refreshWebMart(store, root)
-    val raw = store.read("raw")
     val hasStaging = store.exists("staging")
+    // the set describes the staging it was committed with; none without one
+    val consumed = if (hasStaging) Consumed.read(store) else None
+    val fresh = ChangeScan.fresh(store, consumed)
+    def stagingRows = consumed.fold(store.read("staging").count())(_.stagingRows)
+    if (fresh.isEmpty && hasStaging) {
+      println(s"[graft] run complete: 0 changed rows, $stagingRows staging rows")
+      return
+    }
+    val advance = source.isEmpty && !test
+    def consumedAfter(n: Long) = Consumed(
+      consumed.fold(Set.empty[String])(_.files) ++ (if (advance) fresh else Nil), n)
+
     val staging0 =
       if (hasStaging) store.read("staging")
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         graft.schema.Layers.staging)
-
-    val changes0 = ChangeScan(raw, staging0, source)
+    val changes0 = ChangeScan(store.readFiles("raw", fresh), staging0, source)
     val changes = if (test) ChangeScan.ordered(changes0, Some(100)) else changes0
 
     // observe() collects the quality counters during the batch write —
@@ -513,13 +535,10 @@ object Main {
       spark.read.parquet(s"$batchDir/$name")
     }
     try {
-      // Dedupe the batch ONCE, here: raw permits intra-batch duplicate
-      // raw_ids (insertIfAbsent only anti-joins EXISTING rows, unlike the
-      // reference's ON CONFLICT which also suppresses within-batch dupes)
-      // — feeding the raw batch to applyDelta would double-count
-      // contributions and silently drift the mart state from staging.
-      // The diagnostics column rides along for the quarantine sample.
-      val batch = materialize("updates", StagingMerge.dedupeBatch(normalized))
+      // one row per raw_id already (the change scan picks per id), so
+      // applyDelta never double-counts a key. The diagnostics column
+      // rides along for the quarantine sample.
+      val batch = materialize("updates", normalized)
       val metrics = obs.get
       val nAll = metrics("n_all").asInstanceOf[Long]
       val nBad = metrics("n_bad").asInstanceOf[Long]
@@ -529,10 +548,14 @@ object Main {
           .take(5).foreach(r => System.err.println(s"[graft] quarantine sample: $r"))
       }
       if (nAll == 0 && hasStaging) {
-        println(s"[graft] run complete: 0 changed rows, ${staging0.count()} staging rows")
+        val n = stagingRows
+        if (advance) {
+          Consumed.stage(store, consumedAfter(n))
+          store.commitStaged(Seq(Consumed.Table))
+        }
+        println(s"[graft] run complete: 0 changed rows, $n staging rows")
         return
       }
-
       val updates = Normalize.toStaging(batch)
       // audit, mart-state deltas and touched months all read this ONE
       // pre-commit snapshot pair (SURVEY §7.4 item 3)
@@ -577,13 +600,16 @@ object Main {
         .unionByName(oldRows.select(Views.webMonth(col("date")).as("month")))
         .distinct())
 
+      val n = nStaging.get("n").asInstanceOf[Long]
+      Consumed.stage(store, consumedAfter(n))
+
       beforeCommit()
       store.commitStaged(Seq("audit", "staging", "mart_financials_state",
         "dim_clients_state", "dim_categories_state", "dim_vendors_state",
         "mart_financials", "mart_expenses_by_category", "mart_dim_clients",
-        "mart_dim_categories", "mart_dim_vendors", WebPending))
+        "mart_dim_categories", "mart_dim_vendors", WebPending, Consumed.Table))
       refreshWebMart(store, root)
-      println(s"[graft] run complete: $nAll changed rows, ${nStaging.get("n")} staging rows")
+      println(s"[graft] run complete: $nAll changed rows, $n staging rows")
     } finally ParquetTableStore.deleteStoreDir(batchDir)
   }
 
@@ -641,11 +667,13 @@ object Main {
     // afterwards would re-run the CSV read, numbering, hashing and the
     // id anti-join against all of raw
     val obs = org.apache.spark.sql.Observation("load")
-    val appended =
-      (if (store.exists("raw")) RawLoader.insertIfAbsent(store.read("raw"), incoming)
-       else incoming).observe(obs, count(lit(1)).as("n"))
-    if (store.exists("raw")) store.append("raw", appended)
-    else store.overwrite("raw", appended)
+    def appended(df: DataFrame) = df.observe(obs, count(lit(1)).as("n"))
+    // an append that adds no row adds no file either: every raw file is
+    // one the change scan must read once
+    if (store.exists("raw"))
+      store.appendIf("raw", appended(RawLoader.insertIfAbsent(store.read("raw"), incoming)))(
+        obs.get("n").asInstanceOf[Long] > 0)
+    else store.overwrite("raw", appended(incoming))
     RawLoader.archiveCsv(incoming, s"$root/archive",
       java.time.LocalDate.now().toString, source)
     println(s"[graft] loaded ${obs.get("n")} new rows from $csvPath")

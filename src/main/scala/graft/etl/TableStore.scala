@@ -136,6 +136,59 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
   override def append(name: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(path(name))
 
+  /** Append through a scratch dir hidden inside the table
+    * (`<name>/_append`; readers skip `_`-prefixed paths): after the
+    * write, its part files move into the table only if `keep` holds, so
+    * an empty append (`keep` reads an Observation on the write) or a
+    * failed one adds no file.
+    */
+  def appendIf(name: String, df: DataFrame)(keep: => Boolean): Unit = {
+    val scratch = Paths.get(path(name), "_append")
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(scratch.toString)
+      if (keep) {
+        listNames(scratch).filter(n => n.startsWith("part-") || n.startsWith(".part-"))
+          .foreach(n => Files.move(scratch.resolve(n), Paths.get(path(name), n),
+            StandardCopyOption.ATOMIC_MOVE))
+        spark.catalog.refreshByPath(path(name))
+      }
+    } finally deleteRecursive(scratch)
+  }
+
+  /** Data file names of a plain (unpartitioned) table, from a plain
+    * directory listing: no Spark job. Hidden (`_`/`.`-prefixed) entries
+    * are not data.
+    */
+  def dataFiles(name: String): Seq[String] =
+    listNames(Paths.get(path(name))).filterNot(n => n.startsWith("_") || n.startsWith("."))
+
+  /** Read only the given data files of a plain table. */
+  def readFiles(name: String, files: Seq[String]): DataFrame =
+    spark.read.parquet(files.map(f => s"${path(name)}/$f"): _*)
+
+  /** Stage a small table of text lines, written with plain file I/O (no
+    * Spark job); `commitStaged` publishes it like any staged table.
+    */
+  def stageLines(name: String, lines: Seq[String]): Unit = {
+    val tmp = Paths.get(path(name + "__tmp"))
+    deleteRecursive(tmp)
+    Files.createDirectories(tmp)
+    Files.write(tmp.resolve("lines.txt"), lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+  }
+
+  /** The lines of a published `stageLines` table, if it exists. */
+  def readLines(name: String): Option[Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val f = Paths.get(path(name), "lines.txt")
+    if (Files.exists(f)) Some(Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)) else None
+  }
+
+  private def listNames(dir: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(_.getFileName.toString).toList.sorted finally s.close()
+  }
+
   // ───── bucketed tables (co-located serve joins) ─────
   //
   // A plain parquet read reports no partitioning, so every join against a

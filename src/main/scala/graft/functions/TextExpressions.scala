@@ -254,6 +254,17 @@ case class ExcludePositionsJoin(words: Expression, positions: Expression)
   override def dataType: DataType = StringType
   override def nullable: Boolean = words.nullable
 
+  // eval reads the tokens with getUTF8String and the positions with
+  // getLong, so any other element type must fail at analysis, not at eval
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (words.dataType, positions.dataType) match {
+      case (ArrayType(StringType, _), ArrayType(LongType, _)) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case _ => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"exclude_positions_join needs array<string> tokens and array<bigint> positions, " +
+          s"got ${words.dataType.catalogString} and ${positions.dataType.catalogString}")
+    }
+
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val w = words.eval(input)
     if (w == null) return null

@@ -107,8 +107,9 @@ class IncrementalMartSpec extends SparkTestBase {
   test("intra-batch duplicate keys: dedupeBatch before applyDelta keeps the mart exact") {
     // raw permits duplicate raw_ids within one batch (insertIfAbsent only
     // anti-joins EXISTING rows); feeding the raw batch to applyDelta
-    // double-counts. The pipeline contract (app.Main) is dedupeBatch first
-    // — this pins that contract.
+    // double-counts. The pipeline contract is one row per key before
+    // applyDelta (app.Main gets it from ChangeScan's per-id pick; the
+    // streaming ingest from dedupeBatch) — this pins that contract.
     val raw = graft.queries.EndToEndQueries.ordersAsRawProbe(spark, sfTiny)
     val staging = stagingOf(raw).cache()
     val mart0 = IncrementalMart.initialize(staging).cache()

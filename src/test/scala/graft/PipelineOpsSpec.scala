@@ -1299,6 +1299,21 @@ class PipelineOpsSpec extends SparkTestBase {
     }
   }
 
+  test("exclude_positions_join: array<string> tokens with array<bigint> positions only") {
+    import graft.functions.TextSketches.excludePositionsJoin
+    val words = split(lit("a b c d"), " ")
+    assert(spark.range(1).select(excludePositionsJoin(words, array(lit(2L), lit(4L))))
+      .head().getString(0) == "a c")
+    // an int array would be read with getLong: it must fail at analysis
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(excludePositionsJoin(words, array(lit(2), lit(4))))
+    }
+    assert(e.getMessage.contains("array<bigint>"), e.getMessage)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(excludePositionsJoin(array(lit(1L)), array(lit(1L))))
+    }
+  }
+
   test("bpe merge step: argmax tie-break, non-overlapping rewrite, exact recount") {
     import graft.operators.Bpe
     // 'abab'×3: pairs ab=6(2 per word), ba=3; plus 'aaaa'×1: aa counts
