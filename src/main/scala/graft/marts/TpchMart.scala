@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.ParquetTableStore
+import graft.etl.{ParquetTableStore, StateCache}
 
 /** Incremental view maintenance for the TPC-H Q1 aggregate — the
   * classic distributive-aggregate mart: the stored state keeps RAW
@@ -31,10 +31,6 @@ import graft.etl.ParquetTableStore
   * canonical scan-heavy aggregate.
   */
 object TpchMart {
-
-  private val cacheRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "target/graft-index")
-  private val ensureLock = new Object
 
   /** Group-keyed DECIMAL partials of the Q1 aggregate over `li` —
     * qty/base sums at scale 4, the discounted-revenue sum at scale 8,
@@ -77,16 +73,12 @@ object TpchMart {
     * already holds when the day's slice arrives.
     */
   def ensureQ1State(corpusDir: String, li: DataFrame, cutoff: String): ParquetTableStore = {
-    val mtime = new java.io.File(corpusDir, "lineitem.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$cacheRoot/q1mart1_${cutoff.replace("-", "")}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(li.sparkSession, path)
-      if (!store.exists("q1_state"))
-        store.overwrite("q1_state",
-          q1Partials(li.filter(col("l_shipdate") < lit(cutoff).cast(TimestampType))))
-      store
-    }
+    val spark = li.sparkSession
+    new ParquetTableStore(spark, StateCache.ensure(StateCache.indexRoot,
+        s"q1mart1_${cutoff.replace("-", "")}", corpusDir, "lineitem.parquet") { p =>
+      new ParquetTableStore(spark, p).overwrite("q1_state",
+        q1Partials(li.filter(col("l_shipdate") < lit(cutoff).cast(TimestampType))))
+    })
   }
 
   /** Serve the maintained view: stored state ⊕ the delta slice

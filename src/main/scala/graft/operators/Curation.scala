@@ -591,58 +591,44 @@ object Curation {
     * resolved splits — the loop a deployment runs when cross-split
     * bridges arrive. Every stage is individually replay-safe (absorbed
     * waves assign 0, resolve and reconcile are no-ops at a fixed
-    * point), so the `loop_ok` marker (committed LAST) only saves the
-    * re-run, it is not needed for correctness: a crash mid-protocol
-    * replays the whole loop onto the same fixed point.
+    * point), so the cache marker only saves the re-run, it is not
+    * needed for correctness.
     */
   def ensureExportLoop(corpusDir: String, waves: Seq[DataFrame],
-      threshold: Double, tag: String): graft.etl.ParquetTableStore = {
-    require(waves.nonEmpty, "need at least one wave")
-    val spark = waves.head.sparkSession
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "target/graft-index")
-    val path = s"$root/xloop1_${tag}_${(threshold * 1000).toInt}_${key}_$mtime"
-    loopLock.synchronized {
-      val store = new graft.etl.ParquetTableStore(spark, path)
-      if (!store.exists("loop_ok")) {
-        waves.foreach(w => exportServe(store, w, threshold)(_ => ()))
-        resolveConflictsInStore(store)
-        exportReconcile(store)
-        import spark.implicits._
-        store.stage("loop_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("loop_ok"))
-      }
-      store
+      threshold: Double, tag: String): graft.etl.ParquetTableStore =
+    cachedLoop(s"xloop1_${tag}_${(threshold * 1000).toInt}", corpusDir, waves,
+        threshold) { store =>
+      resolveConflictsInStore(store)
+      exportReconcile(store)
     }
-  }
+
   /** ensureExportLoop's takedown sibling: serve the waves, then
     * `exportRetract` the given ids — the e2e14 serving state. Same
-    * fixed-point replay argument; `takedown_ok` committed LAST only
-    * saves the re-run.
+    * fixed-point replay argument.
     */
   def ensureTakedownLoop(corpusDir: String, waves: Seq[DataFrame],
       retractIds: DataFrame, threshold: Double,
-      tag: String): graft.etl.ParquetTableStore = {
+      tag: String): graft.etl.ParquetTableStore =
+    cachedLoop(s"xtd1_${tag}_${(threshold * 1000).toInt}", corpusDir, waves,
+        threshold) { store =>
+      exportRetract(store, retractIds)
+    }
+
+  /** Serve every wave into a fresh export store, then `finish` it — built
+    * once per (corpus dir, mtime, name) under the index root.
+    */
+  private def cachedLoop(name: String, corpusDir: String, waves: Seq[DataFrame],
+      threshold: Double)(
+      finish: graft.etl.ParquetTableStore => Unit): graft.etl.ParquetTableStore = {
     require(waves.nonEmpty, "need at least one wave")
     val spark = waves.head.sparkSession
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "target/graft-index")
-    val path = s"$root/xtd1_${tag}_${(threshold * 1000).toInt}_${key}_$mtime"
-    loopLock.synchronized {
-      val store = new graft.etl.ParquetTableStore(spark, path)
-      if (!store.exists("takedown_ok")) {
-        waves.foreach(w => exportServe(store, w, threshold)(_ => ()))
-        exportRetract(store, retractIds)
-        import spark.implicits._
-        store.stage("takedown_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("takedown_ok"))
-      }
-      store
-    }
+    new graft.etl.ParquetTableStore(spark, graft.etl.StateCache.ensure(
+        graft.etl.StateCache.indexRoot, name, corpusDir, "documents.parquet") { p =>
+      val store = new graft.etl.ParquetTableStore(spark, p)
+      waves.foreach(w => exportServe(store, w, threshold)(_ => ()))
+      finish(store)
+    })
   }
-  private val loopLock = new Object
 
   def mixSample(docs: DataFrame, ratePermille: Column,
       textCol: String = "text"): DataFrame =

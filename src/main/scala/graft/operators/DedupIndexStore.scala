@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.etl.ParquetTableStore
+import graft.etl.{ParquetTableStore, StateCache}
 
 /** Persisted prefix/postings index for INCREMENTAL near-dup and
   * containment joins — the piece that removes the last corpus-sized term
@@ -466,89 +466,53 @@ object DedupIndexStore {
       shingleSets(inc, n), cands, minContainment)
   }
 
-  // ───── mtime-keyed ensure (registered-query / bench serving surface) ─────
+  // ───── build-once serving state (registered-query / bench surface) ─────
 
-  private val cacheRoot =
-    sys.env.getOrElse("SPARK_GRAFT_DEDUP_STATE_DIR", "target/graft-dedup-state")
-  private val ensureLock = new Object
+  private def cached(spark: SparkSession, name: String, corpusDir: String)(
+      build: String => Unit): ParquetTableStore =
+    new ParquetTableStore(spark, StateCache.ensure(StateCache.dedupRoot, name,
+      corpusDir, "documents.parquet")(build))
 
   /** Index for a corpus dir, built on first use per (dir, mtime, params)
     * — later invocations (bench timed runs included) only read, which is
     * the deployment cost model.
     */
   def ensure(spark: SparkSession, corpusDir: String, docs: DataFrame,
-      n: Int, tJac: Double, tCont: Double): ParquetTableStore = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
+      n: Int, tJac: Double, tCont: Double): ParquetTableStore =
     // "pidx3": layout version — shingle tables now bucket-encoded (by s /
     // doc_id); a key bump orphans (never corrupts) old caches
-    val path = s"$cacheRoot/pidx3_${n}_${(tJac * 1000).toInt}_${(tCont * 1000).toInt}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(spark, path)
-      if (!tables.forall(store.exists)) build(store, docs, n, tJac, tCont)
-      store
+    cached(spark, s"pidx3_${n}_${(tJac * 1000).toInt}_${(tCont * 1000).toInt}",
+        corpusDir) { p =>
+      build(new ParquetTableStore(spark, p), docs, n, tJac, tCont)
     }
-  }
 
   /** Merged index for a corpus dir: each shard builds independently at
     * its own path, then folds into the first shard's store via `merge`
     * — the distributed-build protocol exercised end-to-end, cached per
-    * (dir, mtime, params) like `ensure`. Unlike `ensure`, completion is
-    * multi-commit, so a `merged_ok` marker table (committed LAST)
-    * gates reuse: a crash mid-protocol re-runs the remaining builds and
-    * merges instead of serving a partially-merged index.
+    * (dir, mtime, params) like `ensure`.
     */
   def ensureMerged(spark: SparkSession, corpusDir: String,
       shards: Seq[DataFrame], n: Int, tJac: Double,
-      tCont: Double): ParquetTableStore = {
-    require(shards.nonEmpty, "need at least one shard")
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$cacheRoot/pmrg1_${shards.size}_${n}_${(tJac * 1000).toInt}_" +
-      s"${(tCont * 1000).toInt}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(spark, path)
-      if (!store.exists("merged_ok")) {
-        build(store, shards.head, n, tJac, tCont)
-        shards.tail.zipWithIndex.foreach { case (sh, i) =>
-          val tmp = new ParquetTableStore(spark, s"$path-shard${i + 1}")
-          build(tmp, sh, n, tJac, tCont)
-          merge(store, tmp)
-          // the shard build is transient — folded, it has no reader, and
-          // keeping it accumulates a corpus copy per shard per cache key
-          ParquetTableStore.deleteStoreDir(s"$path-shard${i + 1}")
-        }
-        import spark.implicits._
-        store.stage("merged_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("merged_ok"))
-      }
-      store
+      tCont: Double): ParquetTableStore =
+    cached(spark, s"pmrg1_${shards.size}_${n}_${(tJac * 1000).toInt}_" +
+        s"${(tCont * 1000).toInt}", corpusDir) { p =>
+      StateCache.fold(p, shards)((sp, sh) =>
+          build(new ParquetTableStore(spark, sp), sh, n, tJac, tCont))(
+        (d, s) => merge(new ParquetTableStore(spark, d), new ParquetTableStore(spark, s)))
     }
-  }
 
-  /** Build-then-retract for a corpus dir, cached (the ensureMerged
-    * pattern, `retract_ok` marker committed LAST): the d33 serving
+  /** Build-then-retract for a corpus dir, cached: the d33 serving
     * state — an index whose corpus lost `retractIds` after the build,
     * exercised end-to-end so the takedown path itself sits under the
     * driver's oracle gate, not just its spec.
     */
   def ensureRetracted(spark: SparkSession, corpusDir: String,
       corpus: DataFrame, retractIds: DataFrame, n: Int, tJac: Double,
-      tCont: Double): ParquetTableStore = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$cacheRoot/pret1_${n}_${(tJac * 1000).toInt}_" +
-      s"${(tCont * 1000).toInt}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(spark, path)
-      if (!store.exists("retract_ok")) {
-        build(store, corpus, n, tJac, tCont)
-        retract(store, retractIds)
-        import spark.implicits._
-        store.stage("retract_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("retract_ok"))
-      }
-      store
+      tCont: Double): ParquetTableStore =
+    cached(spark, s"pret1_${n}_${(tJac * 1000).toInt}_${(tCont * 1000).toInt}",
+        corpusDir) { p =>
+      val store = new ParquetTableStore(spark, p)
+      build(store, corpus, n, tJac, tCont)
+      retract(store, retractIds)
     }
-  }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.etl.ParquetTableStore
+import graft.etl.{ParquetTableStore, StateCache}
 
 /** Persisted band index over a fingerprint column — width-parameterized:
   * the 64-bit face (8 × 8-bit bands) is the shared core of the multimodal
@@ -199,75 +199,45 @@ object HammingIndexStore {
     newOld.unionByName(newNew).dropDuplicates("id_a", "id_b")
   }
 
-  // ───── mtime-keyed ensure (registered-query / bench serving surface) ─────
+  // ───── build-once serving state (registered-query / bench surface) ─────
 
-  private val cacheRoot =
-    sys.env.getOrElse("SPARK_GRAFT_DEDUP_STATE_DIR", "target/graft-dedup-state")
-  private val ensureLock = new Object
+  private def cached(spark: SparkSession, name: String, corpusDir: String)(
+      build: String => Unit): ParquetTableStore =
+    new ParquetTableStore(spark, StateCache.ensure(StateCache.dedupRoot, name,
+      corpusDir, "documents.parquet")(build))
 
   /** `tag` separates coexisting indexes over the same corpus (e.g. the
     * perceptual-hash index and the SimHash index both key on
     * documents.parquet's mtime).
     */
   def ensure(spark: SparkSession, corpusDir: String, sig: DataFrame,
-      maxHamming: Int, tag: String): ParquetTableStore = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$cacheRoot/hband1_${tag}_${maxHamming}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(spark, path)
-      if (!tables.forall(store.exists)) build(store, sig, maxHamming)
-      store
+      maxHamming: Int, tag: String): ParquetTableStore =
+    cached(spark, s"hband1_${tag}_$maxHamming", corpusDir) { p =>
+      build(new ParquetTableStore(spark, p), sig, maxHamming)
     }
-  }
 
   /** Merged 64-bit-face store for a corpus dir — shard signatures are
     * banded independently, folded via `merge` (the
     * DedupIndexStore.ensureMerged protocol): cached per (dir, mtime,
-    * tag, shard count), completion gated by a `merged_ok` marker
-    * committed LAST so a crash mid-protocol re-runs instead of serving
-    * a partial fold.
+    * tag, shard count).
     */
   def ensureMerged(spark: SparkSession, corpusDir: String,
       shards: Seq[DataFrame], maxHamming: Int,
-      tag: String): ParquetTableStore = {
-    require(shards.nonEmpty, "need at least one shard")
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$cacheRoot/hbandm_${shards.size}_${tag}_${maxHamming}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(spark, path)
-      if (!store.exists("merged_ok")) {
-        build(store, shards.head, maxHamming)
-        shards.tail.zipWithIndex.foreach { case (sh, i) =>
-          val tmp = new ParquetTableStore(spark, s"$path-shard${i + 1}")
-          build(tmp, sh, maxHamming)
-          merge(store, tmp)
-          // transient shard build — folded, deletable (see DedupIndexStore)
-          ParquetTableStore.deleteStoreDir(s"$path-shard${i + 1}")
-        }
-        import spark.implicits._
-        store.stage("merged_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("merged_ok"))
-      }
-      store
+      tag: String): ParquetTableStore =
+    cached(spark, s"hbandm_${shards.size}_${tag}_$maxHamming", corpusDir) { p =>
+      StateCache.fold(p, shards)((sp, sh) =>
+          build(new ParquetTableStore(spark, sp), sh, maxHamming))(
+        (d, s) => merge(new ParquetTableStore(spark, d), new ParquetTableStore(spark, s)))
     }
-  }
 
   /** b-bit flavor of `ensure` (its own key prefix — the meta schema and
     * band width differ from the 64-bit stores).
     */
   def ensureBbit(spark: SparkSession, corpusDir: String, sig: DataFrame,
-      minEst: Double, tag: String): ParquetTableStore = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$cacheRoot/bband1_${tag}_${(minEst * 1000).toInt}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(spark, path)
-      if (!tablesBbit.forall(store.exists)) buildBbit(store, sig, minEst)
-      store
+      minEst: Double, tag: String): ParquetTableStore =
+    cached(spark, s"bband1_${tag}_${(minEst * 1000).toInt}", corpusDir) { p =>
+      buildBbit(new ParquetTableStore(spark, p), sig, minEst)
     }
-  }
 
   /** b-bit flavor of `ensureMerged` — shard signatures banded
     * independently at the same minEst, folded by the face-agnostic
@@ -277,27 +247,10 @@ object HammingIndexStore {
     */
   def ensureMergedBbit(spark: SparkSession, corpusDir: String,
       shards: Seq[DataFrame], minEst: Double,
-      tag: String): ParquetTableStore = {
-    require(shards.nonEmpty, "need at least one shard")
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$cacheRoot/bbandm_${shards.size}_${tag}_${(minEst * 1000).toInt}_${key}_$mtime"
-    ensureLock.synchronized {
-      val store = new ParquetTableStore(spark, path)
-      if (!store.exists("merged_ok")) {
-        buildBbit(store, shards.head, minEst)
-        shards.tail.zipWithIndex.foreach { case (sh, i) =>
-          val tmp = new ParquetTableStore(spark, s"$path-shard${i + 1}")
-          buildBbit(tmp, sh, minEst)
-          merge(store, tmp)
-          // transient shard build — folded, deletable (see DedupIndexStore)
-          ParquetTableStore.deleteStoreDir(s"$path-shard${i + 1}")
-        }
-        import spark.implicits._
-        store.stage("merged_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("merged_ok"))
-      }
-      store
+      tag: String): ParquetTableStore =
+    cached(spark, s"bbandm_${shards.size}_${tag}_${(minEst * 1000).toInt}", corpusDir) { p =>
+      StateCache.fold(p, shards)((sp, sh) =>
+          buildBbit(new ParquetTableStore(spark, sp), sh, minEst))(
+        (d, s) => merge(new ParquetTableStore(spark, d), new ParquetTableStore(spark, s)))
     }
-  }
 }

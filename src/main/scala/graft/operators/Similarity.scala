@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.etl.{ParquetTableStore, StateCache}
+
 /** Vector similarity over an embedding column (array<float>):
   * brute-force cosine (the exact baseline) and random-hyperplane LSH
   * bucketing (the approximate scale path).
@@ -337,9 +339,10 @@ object Similarity {
 
   // ───── stored semantic cluster state (the deployment shape for sem2) ─────
 
-  private val stateRoot =
-    sys.env.getOrElse("SPARK_GRAFT_DEDUP_STATE_DIR", "target/graft-dedup-state")
-  private val stateLock = new Object
+  private def cached(spark: org.apache.spark.sql.SparkSession, name: String,
+      corpusDir: String)(build: String => Unit): ParquetTableStore =
+    new ParquetTableStore(spark,
+      StateCache.ensure(StateCache.dedupRoot, name, corpusDir, "embeddings.parquet")(build))
 
   /** Persisted semantic-dedup state for a corpus slice: four tables in
     * one journaled group commit (ParquetTableStore) —
@@ -370,19 +373,12 @@ object Similarity {
     */
   def ensureSemanticState(spark: org.apache.spark.sql.SparkSession,
       corpusDir: String, existing: DataFrame, minCos: Double,
-      tag: String): graft.etl.ParquetTableStore = {
-    val mtime = new java.io.File(corpusDir, "embeddings.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
+      tag: String): graft.etl.ParquetTableStore =
     // "semst2": layout version (cents+assigned+pairs+labels); bumping the
     // prefix orphans (never corrupts) the older pairs-less caches
-    val path = s"$stateRoot/semst2_${tag}_${(minCos * 1000).toInt}_${key}_$mtime"
-    stateLock.synchronized {
-      val store = new graft.etl.ParquetTableStore(spark, path)
-      if (!Seq("cents", "assigned", "pairs", "labels").forall(store.exists))
-        buildSemanticState(store, existing, minCos)
-      store
+    cached(spark, s"semst2_${tag}_${(minCos * 1000).toInt}", corpusDir) { p =>
+      buildSemanticState(new ParquetTableStore(spark, p), existing, minCos)
     }
-  }
 
   /** The state build body — shared by `ensureSemanticState` and the
     * build-then-retract cache (`ensureRetractedSemantic`). Trains the
@@ -514,35 +510,17 @@ object Similarity {
     * slice builds its state independently under the frozen cells, and
     * the folds run pairwise into the first shard's store — the
     * distributed-build protocol exercised end-to-end, cached per
-    * (dir, mtime, minCos, shards, tag). Completion is multi-commit, so a
-    * `merged_ok` marker (committed LAST) gates reuse; transient shard
-    * stores are deleted after their fold.
+    * (dir, mtime, minCos, shards, tag).
     */
   def ensureMergedSemantic(spark: org.apache.spark.sql.SparkSession,
       corpusDir: String, slices: Seq[DataFrame], minCos: Double,
       tag: String): graft.etl.ParquetTableStore = {
-    require(slices.nonEmpty, "need at least one slice")
-    val mtime = new java.io.File(corpusDir, "embeddings.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$stateRoot/semmrg1_${slices.size}_${tag}_" +
-      s"${(minCos * 1000).toInt}_${key}_$mtime"
-    stateLock.synchronized {
-      val store = new graft.etl.ParquetTableStore(spark, path)
-      if (!store.exists("merged_ok")) {
-        import spark.implicits._
-        val cents = labelCentroids(slices.reduce(_ unionByName _))
-        buildSemanticStateFrozen(store, slices.head, cents, minCos)
-        slices.tail.zipWithIndex.foreach { case (sl, i) =>
-          val tmpPath = s"$path-shard${i + 1}"
-          val tmp = new graft.etl.ParquetTableStore(spark, tmpPath)
-          buildSemanticStateFrozen(tmp, sl, cents, minCos)
-          semanticMerge(store, tmp, minCos)
-          graft.etl.ParquetTableStore.deleteStoreDir(tmpPath)
-        }
-        store.stage("merged_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("merged_ok"))
-      }
-      store
+    def store(p: String) = new ParquetTableStore(spark, p)
+    cached(spark, s"semmrg1_${slices.size}_${tag}_${(minCos * 1000).toInt}", corpusDir) { p =>
+      val cents = labelCentroids(slices.reduce(_ unionByName _))
+      StateCache.fold(p, slices)(
+          (sp, sl) => buildSemanticStateFrozen(store(sp), sl, cents, minCos))(
+        (d, s) => semanticMerge(store(d), store(s), minCos))
     }
   }
 
@@ -588,29 +566,19 @@ object Similarity {
     store.commitStaged(Seq("assigned", "pairs", "labels"))
   }
 
-  /** Build-then-retract for a corpus dir, cached (`retract_ok` marker
-    * committed LAST — the DedupIndexStore.ensureRetracted protocol):
-    * the sem3 serving state, so the takedown path itself sits under the
-    * driver's oracle gate, not just its spec.
+  /** Build-then-retract for a corpus dir, cached (the
+    * DedupIndexStore.ensureRetracted protocol): the sem3 serving state,
+    * so the takedown path itself sits under the oracle gate,
+    * not just its spec.
     */
   def ensureRetractedSemantic(spark: org.apache.spark.sql.SparkSession,
       corpusDir: String, existing: DataFrame, minCos: Double, tag: String,
-      retractIds: DataFrame): graft.etl.ParquetTableStore = {
-    val mtime = new java.io.File(corpusDir, "embeddings.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$stateRoot/semrt1_${tag}_${(minCos * 1000).toInt}_${key}_$mtime"
-    stateLock.synchronized {
-      val store = new graft.etl.ParquetTableStore(spark, path)
-      if (!store.exists("retract_ok")) {
-        import spark.implicits._
-        buildSemanticState(store, existing, minCos)
-        semanticRetract(store, retractIds)
-        store.stage("retract_ok", Seq(1).toDF("ok"))
-        store.commitStaged(Seq("retract_ok"))
-      }
-      store
+      retractIds: DataFrame): graft.etl.ParquetTableStore =
+    cached(spark, s"semrt1_${tag}_${(minCos * 1000).toInt}", corpusDir) { p =>
+      val store = new ParquetTableStore(spark, p)
+      buildSemanticState(store, existing, minCos)
+      semanticRetract(store, retractIds)
     }
-  }
 
   /** The stored frozen quantizer, collected (k × dim doubles — KB). */
   def readCents(store: graft.etl.ParquetTableStore): Array[(Int, Array[Double])] =

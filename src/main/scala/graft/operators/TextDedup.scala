@@ -864,9 +864,13 @@ object TextDedup {
 
   // ───── stored cluster state (the deployment surface for incremental dedup) ─────
 
-  private val stateRoot =
-    sys.env.getOrElse("SPARK_GRAFT_DEDUP_STATE_DIR", "target/graft-dedup-state")
-  private val stateLock = new Object
+  /** A per-corpus table, written once per (corpus dir, mtime, name) and
+    * read thereafter.
+    */
+  private def cached(spark: SparkSession, name: String, corpusDir: String)(
+      table: => DataFrame): DataFrame =
+    spark.read.parquet(graft.etl.StateCache.ensure(graft.etl.StateCache.dedupRoot,
+      name, corpusDir, "documents.parquet")(table.write.parquet(_)))
 
   /** Cluster labels of a corpus as a PERSISTED artifact — the state table
     * an incremental dedup deployment keeps between batches (app.Main's
@@ -879,17 +883,9 @@ object TextDedup {
     * pairs equal the exact Jaccard baseline by the prefix theorem.
     */
   def ensureClusters(spark: SparkSession, corpusDir: String, docs: DataFrame,
-      n: Int, minJaccard: Double, tag: String): DataFrame = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$stateRoot/cc_${tag}_${n}_${(minJaccard * 1000).toInt}_${key}_$mtime"
-    stateLock.synchronized {
-      if (!new java.io.File(path, "_SUCCESS").exists)
-        connectedComponents(prefixFilterPairs(docs, n, minJaccard))
-          .write.mode("overwrite").parquet(path)
-    }
-    spark.read.parquet(path)
-  }
+      n: Int, minJaccard: Double, tag: String): DataFrame =
+    cached(spark, s"cc_${tag}_${n}_${(minJaccard * 1000).toInt}", corpusDir)(
+      connectedComponents(prefixFilterPairs(docs, n, minJaccard)))
 
   /** Near-dup PAIR fabric of a corpus as a persisted artifact — the
     * edge set graph analytics (g2's seed expansion) and cluster builds
@@ -898,17 +894,9 @@ object TextDedup {
     * fabric; clusters are derived state on top of it).
     */
   def ensurePairs(spark: SparkSession, corpusDir: String, docs: DataFrame,
-      n: Int, minJaccard: Double, tag: String): DataFrame = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$stateRoot/pairs_${tag}_${n}_${(minJaccard * 1000).toInt}_${key}_$mtime"
-    stateLock.synchronized {
-      if (!new java.io.File(path, "_SUCCESS").exists)
-        prefixFilterPairs(docs, n, minJaccard)
-          .write.mode("overwrite").parquet(path)
-    }
-    spark.read.parquet(path)
-  }
+      n: Int, minJaccard: Double, tag: String): DataFrame =
+    cached(spark, s"pairs_${tag}_${n}_${(minJaccard * 1000).toInt}", corpusDir)(
+      prefixFilterPairs(docs, n, minJaccard))
 
   /** Containment keep decisions of a corpus as a PERSISTED artifact —
     * the decision table `containmentKeepIncremental` merges each batch
@@ -918,17 +906,9 @@ object TextDedup {
     * — the work a deployment actually pays per batch.
     */
   def ensureKeep(spark: SparkSession, corpusDir: String, docs: DataFrame,
-      n: Int, minContainment: Double, tag: String): DataFrame = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val key = corpusDir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"$stateRoot/keep_${tag}_${n}_${(minContainment * 1000).toInt}_${key}_$mtime"
-    stateLock.synchronized {
-      if (!new java.io.File(path, "_SUCCESS").exists)
-        containmentKeep(docs, n, minContainment)
-          .write.mode("overwrite").parquet(path)
-    }
-    spark.read.parquet(path)
-  }
+      n: Int, minContainment: Double, tag: String): DataFrame =
+    cached(spark, s"keep_${tag}_${n}_${(minContainment * 1000).toInt}", corpusDir)(
+      containmentKeep(docs, n, minContainment))
 
   /** The full incremental-clusters computation FROM SCRATCH — the
     * one-query composition (PipelineOpsSpec pins it == batch CC; the

@@ -181,55 +181,25 @@ object TextIndexStore {
       if (requireAll) Some(terms.size) else None)
   }
 
-  // Build-once-per-corpus scratch artifact for the registered query
-  // (the VectorIndexStore.ensure* pattern): keyed by corpus dir +
-  // parquet mtime so a regenerated corpus rebuilds.
-  private val cacheRoot =
-    sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "target/graft-index")
-  private val ensureLock = new Object
+  // Build-once-per-corpus scratch artifact for the registered query,
+  // keyed by corpus dir + documents.parquet mtime (StateCache).
+  private def cached(name: String, corpusDir: String)(build: String => Unit): String =
+    graft.etl.StateCache.ensure(graft.etl.StateCache.indexRoot, name, corpusDir,
+      "documents.parquet")(build)
 
   /** Stored-index path for a corpus dir, building it on first use.
     * "textb": layout version — postings now bucket-encoded; a key bump
     * orphans (never corrupts) old plain-parquet caches.
     */
-  def ensure(corpusDir: String, docs: DataFrame): String = {
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val path = s"$cacheRoot/textb_" +
-      corpusDir.replaceAll("[^A-Za-z0-9.]", "_") + "_" + mtime
-    ensureLock.synchronized {
-      if (!store(docs.sparkSession, path).exists("stats"))
-        write(path, docs)
-    }
-    path
-  }
+  def ensure(corpusDir: String, docs: DataFrame): String =
+    cached("textb", corpusDir)(write(_, docs))
 
   /** Merged index for a corpus dir — shards build independently, fold
     * via `merge` (the DedupIndexStore.ensureMerged protocol): cached per
-    * (dir, mtime, shard count), completion gated by a `merged_ok`
-    * marker committed LAST so a crash mid-protocol re-runs instead of
-    * serving a partial fold.
+    * (dir, mtime, shard count).
     */
-  def ensureMerged(corpusDir: String, shards: Seq[DataFrame]): String = {
-    require(shards.nonEmpty, "need at least one shard")
-    val spark = shards.head.sparkSession
-    val mtime = new java.io.File(corpusDir, "documents.parquet").lastModified
-    val path = s"$cacheRoot/textm_${shards.size}_" +
-      corpusDir.replaceAll("[^A-Za-z0-9.]", "_") + "_" + mtime
-    ensureLock.synchronized {
-      val st = store(spark, path)
-      if (!st.exists("merged_ok")) {
-        write(path, shards.head)
-        shards.tail.zipWithIndex.foreach { case (sh, i) =>
-          write(s"$path-shard${i + 1}", sh)
-          merge(spark, path, s"$path-shard${i + 1}")
-          // transient shard build — folded, deletable (see DedupIndexStore)
-          graft.etl.ParquetTableStore.deleteStoreDir(s"$path-shard${i + 1}")
-        }
-        import spark.implicits._
-        st.stage("merged_ok", Seq(1).toDF("ok"))
-        st.commitStaged(Seq("merged_ok"))
-      }
+  def ensureMerged(corpusDir: String, shards: Seq[DataFrame]): String =
+    cached(s"textm_${shards.size}", corpusDir) { p =>
+      graft.etl.StateCache.fold(p, shards)(write)(merge(shards.head.sparkSession, _, _))
     }
-    path
-  }
 }

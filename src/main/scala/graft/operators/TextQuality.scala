@@ -312,7 +312,9 @@ object TextQuality {
     * (same fabric as lmScore); class constants are a broadcast of
     * n_classes rows; the argmax window partitions by doc — never global.
     *
-    * Output: (doc_id, pred_label, score_micro).
+    * Output: (doc_id, pred_label, score_micro). A doc whose text is null
+    * gets no output row (it has no tokens to score); an empty text is one
+    * empty token and is scored.
     */
   def nbScoreWith(model: NbModel, batch: DataFrame): DataFrame = {
     // (doc, tok, k) term frequencies, not raw occurrences: the scoring

@@ -66,54 +66,6 @@ object Streams {
   def enrich(stream: DataFrame, dim: DataFrame, key: String): DataFrame =
     stream.join(broadcast(dim), Seq(key), "left")
 
-  /** Streaming flavor of the full incremental ELT (SURVEY §3.1): raw
-    * parquet dir → content-hash dedup → per-micro-batch normalize + merge
-    * into the staging store. foreachBatch gives the reference's idempotent
-    * upsert; Trigger.AvailableNow gives its daily-batch cadence with
-    * streaming bookkeeping (new files only, exactly-once per batch).
-    */
-  def cdcIngest(spark: org.apache.spark.sql.SparkSession, rawDir: String,
-      store: graft.etl.TableStore, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.etl.{Normalize, StagingMerge}
-    val raw = spark.readStream.schema(graft.schema.Layers.raw).parquet(rawDir)
-    raw.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // dedupe ONCE here (same invariant as app.Main: raw permits
-        // intra-batch duplicate ids; the mart delta must not double-count)
-        val updates = StagingMerge.dedupeBatch(Normalize.toStaging(Normalize(batch
-          .dropDuplicates("payload_hash")
-          .select(col("id").as("raw_id"), col("sheet_row_number"),
-            col("extracted_at").as("received_at"), lit("live").as("source_type"),
-            col("payload")))))
-        val staging0 =
-          if (store.exists("staging")) store.read("staging") else updates.limit(0)
-        val merged = StagingMerge.merge(staging0, updates)
-        // the P&L mart state rides the SAME micro-batch delta — the mart
-        // stays in lockstep with staging per batch, and the delta is
-        // applied (and materialized by the overwrite) BEFORE the staging
-        // swap invalidates staging0's files
-        val oldRows = staging0.join(updates.select(col("raw_id")), Seq("raw_id"), "left_semi")
-        val martState =
-          if (store.exists("mart_financials_state"))
-            graft.marts.IncrementalMart.applyDelta(
-              store.read("mart_financials_state"), oldRows, updates)
-          else graft.marts.IncrementalMart.initialize(merged)
-        store.overwrite("mart_financials_state", martState)
-        // the ref-counted client dimension rides the same delta (DISTINCT
-        // is not abelian — same invariant as app.Main's batch path)
-        val clientsState =
-          if (store.exists("dim_clients_state"))
-            graft.marts.IncrementalDims.applyClientsDelta(
-              store.read("dim_clients_state"), oldRows, updates)
-          else graft.marts.IncrementalDims.initializeClients(merged)
-        store.overwrite("dim_clients_state", clientsState)
-        store.overwrite("staging", merged)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
-
   /** Streaming twin of the 64-bit band-index serve (mm4/d28): signature
     * batches (doc_id, hash64) arrive as parquet files; each batch's
     * near-dup pair delta vs (everything absorbed so far ∪ batch) lands
@@ -145,9 +97,8 @@ object Streams {
       .start()
   }
 
-  /** Streaming twin of INCREMENTAL DEDUP (the cdcIngest pattern applied
-    * to curation): documents arrive as parquet files; each micro-batch
-    * generates only its delta pairs against the accumulated corpus
+  /** Streaming twin of INCREMENTAL DEDUP: documents arrive as parquet
+    * files; each micro-batch generates only its delta pairs against the accumulated corpus
     * (`prefixFilterPairsIncremental` — the existing corpus never
     * self-joins) and merges them into the standing cluster labels by
     * contraction (`ccIncremental` — CC over a delta-sized reduced graph).
@@ -316,7 +267,7 @@ object Streams {
     * Delivery note: parquet append is NOT idempotent, so this surface is
     * exactly-once only up to Structured Streaming's file-source
     * bookkeeping (a crash INSIDE foreachBatch before checkpoint commit
-    * replays the batch and double-encodes it). The dedup/cdc streams
+    * replays the batch and double-encodes it). The dedup streams
     * route through idempotent merges instead; an index deployment that
     * needs hard exactly-once writes codes through a manifest commit —
     * batch-id-named files — which `etl.ManifestTableStore` provides.

@@ -1,14 +1,38 @@
 package graft
 
-/** Writes PLANS.md: formatted physical plans of the headline queries at
-  * sf0.01 — the "is this the plan you'd want at 100 TB" evidence
-  * (pushdown, broadcast, partial aggs, no nested loops) in reviewable
-  * form. Regenerate: sbt "Test/runMain graft.DumpPlans".
+/** Formatted physical plans at sf0.01, in one of two forms:
+  *   - with no argument, PLANS.md: the plans of the headline queries —
+  *     the "is this the plan you'd want at 100 TB" evidence (pushdown,
+  *     broadcast, partial aggs, no nested loops) in reviewable form.
+  *     Regenerate: sbt "Test/runMain graft.DumpPlans".
+  *   - with `<round> <suffix> <query>...`, a round's optimization
+  *     evidence: plans/<round>/<query>_<suffix>.txt per named query
+  *     (suffix "before" on the pre-optimization commit, "after" on HEAD).
+  *     sbt "Test/runMain graft.DumpPlans r13 after d20_containment_keep"
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.get()
     val d = "/root/testdata/sf0.01"
+    def plan(n: String): String =
+      SparkEntry.registry(n).fn(spark, d).queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    if (args.isEmpty) writePlansMd(plan) else writeRound(args.toSeq, plan)
+    spark.stop()
+  }
+
+  private def writeRound(args: Seq[String], plan: String => String): Unit = {
+    require(args.length >= 3, "usage: DumpPlans <round> <suffix> <query>...")
+    val Seq(round, suffix) = args.take(2)
+    val dir = java.nio.file.Paths.get("plans", round)
+    java.nio.file.Files.createDirectories(dir)
+    args.drop(2).foreach { n =>
+      java.nio.file.Files.write(dir.resolve(s"${n}_$suffix.txt"), plan(n).getBytes("UTF-8"))
+      println(s"[plans] wrote plans/$round/${n}_$suffix.txt")
+    }
+  }
+
+  private def writePlansMd(plan: String => String): Unit = {
     val names = Seq("q1_pricing_summary", "q3_top_revenue_orders", "q5_region_revenue",
       "j1_anti_join", "j5_asof_join", "j6_salted_skew_join", "j7_range_join",
       "st3_sliding_window", "d3_minhash_lsh", "d8_keep_canonical", "t6_fuzzy_match",
@@ -79,14 +103,10 @@ object DumpPlans {
     sb.append("keeps the shortlist window's sort-shuffle output-sized (Spark's\n")
     sb.append("rank-filter pushdown — PropertySpec pins the shape).\n")
     names.foreach { n =>
-      val df = SparkEntry.registry(n).fn(spark, d)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $n\n\n```\n").append(plan.take(6000)).append("\n```\n")
+      sb.append(s"\n## $n\n\n```\n").append(plan(n).take(6000)).append("\n```\n")
     }
     java.nio.file.Files.write(java.nio.file.Paths.get("PLANS.md"),
       sb.toString.getBytes("UTF-8"))
     println("[plans] wrote PLANS.md")
-    spark.stop()
   }
 }

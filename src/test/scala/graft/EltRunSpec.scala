@@ -116,6 +116,23 @@ class EltRunSpec extends SparkTestBase {
     assert(consumed(root).contains(ChangeScan.Consumed(rawFiles(root), 4)))
     assertMartsMatchStaging(root)
     assert(topLevel(root) == published, "a successful run left scratch or staged dirs")
+
+    // a later raw file (written beside `load`, which only inserts new ids)
+    // carries an edit of r1 and an unchanged r2: the edit lands and is
+    // audited, the repeat does not, and every mart follows staging
+    import org.apache.spark.sql.functions.{lit, transform_values, when}
+    val edited = spark.read.parquet(s"$root/raw").filter($"id".isin("r1", "r2"))
+      .select($"sheet_row_number", when($"id" === "r1", transform_values($"payload",
+        (k, v) => when(k === "Total RUB", lit("150,00")).otherwise(v))).otherwise($"payload")
+        .as("payload"))
+    graft.etl.RawLoader.fromPayloads(edited, "sheet_test")
+      .write.mode("append").parquet(s"$root/raw")
+    assert(run(root).contains("[graft] run complete: 1 changed rows, 4 staging rows"))
+    assert(spark.read.parquet(s"$root/staging").filter($"raw_id" === "r1")
+      .select($"total_rub".cast("double")).as[Double].collect().toSeq == Seq(150.0))
+    assert(spark.read.parquet(s"$root/audit").select($"record_id").distinct()
+      .as[String].collect().toSeq == Seq("r1"))
+    assertMartsMatchStaging(root)
   }
 
   test("runElt: after a re-load that appends no row, raw keeps its files and the run starts no Spark job") {

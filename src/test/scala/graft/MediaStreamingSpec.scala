@@ -865,53 +865,6 @@ class MediaStreamingSpec extends SparkTestBase {
       "stored shingle counts drifted from the full-corpus frequencies")
   }
 
-  test("cdc ingest stream: raw files → dedup → staging merge, incremental") {
-    val rawDir = java.nio.file.Files.createTempDirectory("graft_cdc_raw").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt").toString
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_cdc_store").toString
-    // manifest store behind the same trait — proves the commit protocol
-    // swaps in under the streaming sink without touching pipeline code
-    val store = new graft.etl.ManifestTableStore(spark, storeDir)
-
-    def rawBatch(rows: Seq[(String, String)]): org.apache.spark.sql.DataFrame =
-      graft.etl.RawLoader.fromPayloads(
-        rows.zipWithIndex.map { case ((id, total), i) =>
-          (i + 2, Map("PK" -> id, "Date" -> "16.07.2023", "Type" -> "Расход",
-            "Total RUB" -> total))
-        }.toDF("sheet_row_number", "payload"), "stream_test")
-
-    rawBatch(Seq("r1" -> "100.00", "r2" -> "200.00"))
-      .write.mode("append").parquet(rawDir)
-    val q1 = Streams.cdcIngest(spark, rawDir, store, ckpt)
-    q1.awaitTermination(120000)
-    assert(store.read("staging").count() == 2)
-
-    // second file: one edit, one repeat — only the edit lands
-    rawBatch(Seq("r1" -> "150.00", "r2" -> "200.00"))
-      .write.mode("append").parquet(rawDir)
-    val q2 = Streams.cdcIngest(spark, rawDir, store, ckpt)
-    q2.awaitTermination(120000)
-    val staging = store.read("staging")
-    assert(staging.count() == 2)
-    assert(staging.filter($"raw_id" === "r1").head()
-      .getAs[java.math.BigDecimal]("total_rub").doubleValue() == 150.0)
-    // the P&L mart state rode each micro-batch delta: present() over the
-    // state equals a full view recompute on the merged snapshot
-    val fromState = graft.marts.IncrementalMart.present(
-        store.read("mart_financials_state"))
-      .collect().map(_.toString).toSet
-    val recomputed = graft.marts.Views.financialsV(staging)
-      .drop("last_updated").collect().map(_.toString).toSet
-    assert(fromState == recomputed, "streaming mart state drifted from staging")
-    // the ref-counted client dimension rode the same micro-batch deltas
-    val dimFromState = graft.marts.IncrementalDims.presentClients(
-        store.read("dim_clients_state"))
-      .collect().map(_.toString).toSet
-    val dimRecomputed = graft.marts.Views.dimClientsV(staging)
-      .collect().map(_.toString).toSet
-    assert(dimFromState == dimRecomputed, "streaming dim state drifted from staging")
-  }
-
   test("frame sampling slices deterministic md5-correct frames") {
     val media = Seq(Media.MediaFile(1L, "video", ("ab" * 100).getBytes("UTF-8"), "s")).toDS()
     val frames = Media.frameSample(media, frameSize = 64, stride = 2).collect()

@@ -63,8 +63,9 @@ def main(sf_dir, out_dir):
         else:
             n_fail += 1
             print(f"FAIL {name}: {len(got)} vs {len(exp)} rows")
-            diff_g = [r for r in got if r not in set(exp)][:3]
-            diff_e = [r for r in exp if r not in set(got)][:3]
+            exp_set, got_set = set(exp), set(got)
+            diff_g = [r for r in got if r not in exp_set][:3]
+            diff_e = [r for r in exp if r not in got_set][:3]
             for r in diff_g: print(f"   spark-only: {r}")
             for r in diff_e: print(f"   duck-only:  {r}")
     print(f"== {n_pass} pass, {n_fail} fail")
