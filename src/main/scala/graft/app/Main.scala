@@ -2,10 +2,12 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.GraftSession
 import graft.etl.{ChangeScan, Normalize, ParquetTableStore, RawLoader, StagingMerge}
-import graft.marts.Views
+import graft.marts.{IncrementalDims, IncrementalMart, Views}
+import graft.schema.Layers
 
 /** CLI mirroring the reference's entry points (main.py:249-297):
   *
@@ -465,23 +467,32 @@ object Main {
     *     the summary line takes the staging count the set records;
     *  2. the change scan, which picks one row per id, and Normalize run
     *     ONCE: the change set is written to the batch scratch dir
-    *     (`<root>/_batch`) with the quality counters observed on that
-    *     write, and the previous versions of its keys (staging ⋉ batch
-    *     ids) are written beside it. Every later output reads those two
-    *     files, never the change scan's plan;
+    *     (`<root>/_batch`), and the previous versions of its keys (staging
+    *     ⋉ batch ids) are written beside it. Observations on those two
+    *     writes collect the quality counters, the number of replaced rows
+    *     and the web-mart months both sides touch, with no job of their
+    *     own. Every later output reads those two files, never the change
+    *     scan's plan;
     *  3. an empty change set over an existing staging layer writes no
     *     table (the reference writes nothing either,
     *     src/transform.py:200-334); a plain run still publishes the fresh
     *     files into the consumed set;
-    *  4. audit, staging, the four mart states, the five mart presents, the
-    *     web mart's pending months and the consumed set are staged and
-    *     published as ONE journaled group commit: a crash before it leaves
-    *     every table at its pre-run content (the next run re-reads the
-    *     same fresh files, and the anti-join makes that idempotent), a
-    *     crash inside it rolls forward on reopen, so no mart delta is ever
-    *     applied twice;
-    *  5. the pending month partitions of `mart_web_transactions` are
+    *  4. staging, the four mart states, the five mart presents, the web
+    *     mart's pending months (staged from the observed set) and the
+    *     consumed set are staged and published as ONE journaled group
+    *     commit: a crash before it leaves every table at its pre-run
+    *     content (the next run re-reads the same fresh files, and the
+    *     anti-join makes that idempotent), a crash inside it rolls forward
+    *     on reopen, so no mart delta is ever applied twice. Audit joins the
+    *     group only when the batch replaced a row or no audit table exists
+    *     yet: an insert-only batch has an empty audit delta and leaves
+    *     audit's files untouched. Each present sorts its small state in
+    *     one task;
+    *  5. the observed months' partitions of `mart_web_transactions` are
     *     rewritten in place from the published staging (`refreshWebMart`).
+    *
+    * Every read declares its schema (`eltSchemas`), so no Spark job infers
+    * one from a Parquet footer.
     *
     * `--source` and `--test` runs leave fresh rows unapplied (another
     * source's, or past the 100-row limit), so they never add files to the
@@ -492,17 +503,20 @@ object Main {
     */
   def runElt(spark: SparkSession, root: String, source: Option[String], test: Boolean,
       beforeCommit: () => Unit = () => ()): Unit = {
-    import graft.marts.{IncrementalDims, IncrementalMart}
     import ChangeScan.Consumed
+    import org.apache.spark.sql.Observation
+    import spark.implicits._
     val store = new ParquetTableStore(spark, root)
     require(store.exists("raw"), s"no raw layer under $root — run `load` first")
+    val schema = eltSchemas(spark)
     // finish the web-mart refresh of a run that crashed after its commit
-    if (store.exists(WebPending)) refreshWebMart(store, root)
+    if (store.exists(WebPending)) refreshWebMart(store, root,
+      store.read(WebPending, schema(WebPending)).as[String].collect().toSet)
     val hasStaging = store.exists("staging")
     // the set describes the staging it was committed with; none without one
     val consumed = if (hasStaging) Consumed.read(store) else None
     val fresh = ChangeScan.fresh(store, consumed)
-    def stagingRows = consumed.fold(store.read("staging").count())(_.stagingRows)
+    def stagingRows = consumed.fold(store.read("staging", schema("staging")).count())(_.stagingRows)
     if (fresh.isEmpty && hasStaging) {
       println(s"[graft] run complete: 0 changed rows, $stagingRows staging rows")
       return
@@ -512,27 +526,29 @@ object Main {
       consumed.fold(Set.empty[String])(_.files) ++ (if (advance) fresh else Nil), n)
 
     val staging0 =
-      if (hasStaging) store.read("staging")
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.schema.Layers.staging)
-    val changes0 = ChangeScan(store.readFiles("raw", fresh), staging0, source)
+      if (hasStaging) store.read("staging", schema("staging")) else emptyStaging(spark)
+    val changes0 = ChangeScan(store.readFiles("raw", fresh, schema("raw")), staging0, source)
     val changes = if (test) ChangeScan.ordered(changes0, Some(100)) else changes0
 
+    // month partitions the web mart must rebuild: new OR pre-update row
+    // months (an upsert that moves a row across months rewrites both)
+    val months = collect_set(Views.webMonth(col("date"))).as("months")
+    def observedMonths(o: Observation) = o.get("months").asInstanceOf[Iterable[String]]
     // observe() collects the quality counters during the batch write —
     // no extra jobs over the normalize (ref main.py:96-103 ran separate
     // counting queries; a 100 TB normalize can't afford a second pass)
-    val obs = org.apache.spark.sql.Observation("quality")
+    val obs = Observation("quality")
     val normalized = Normalize(changes.select(
         col("id").as("raw_id"), col("sheet_row_number"),
         col("extracted_at").as("received_at"), lit("live").as("source_type"),
         col("payload")))
       .observe(obs, count(lit(1)).as("n_all"),
-        count(when(size(col("validation_warnings")) > 0, 1)).as("n_bad"))
+        count(when(size(col("validation_warnings")) > 0, 1)).as("n_bad"), months)
 
     val batchDir = s"$root/_batch"
     def materialize(name: String, df: DataFrame): DataFrame = {
       df.write.mode(SaveMode.Overwrite).parquet(s"$batchDir/$name")
-      spark.read.parquet(s"$batchDir/$name")
+      spark.read.schema(df.schema).parquet(s"$batchDir/$name")
     }
     try {
       // one row per raw_id already (the change scan picks per id), so
@@ -559,15 +575,26 @@ object Main {
       val updates = Normalize.toStaging(batch)
       // audit, mart-state deltas and touched months all read this ONE
       // pre-commit snapshot pair (SURVEY §7.4 item 3)
+      val replaced = Observation("replaced")
       val oldRows =
         if (hasStaging) materialize("old_rows",
-          staging0.join(updates.select(col("raw_id")), Seq("raw_id"), "left_semi"))
+          staging0.join(updates.select(col("raw_id")), Seq("raw_id"), "left_semi")
+            .observe(replaced, count(lit(1)).as("n"), months))
         else staging0
-      // restricting staging to the batch's keys leaves the raw_id join unchanged
-      val audit = StagingMerge.auditDiff(oldRows, updates)
-      store.stage("audit",
-        if (store.exists("audit")) store.read("audit").unionByName(audit) else audit)
-      val nStaging = org.apache.spark.sql.Observation("staging")
+      val (nReplaced, oldMonths) =
+        if (hasStaging) (replaced.get("n").asInstanceOf[Long], observedMonths(replaced))
+        else (0L, Nil)
+      val webMonths = observedMonths(obs).toSet ++ oldMonths
+      // an insert-only batch has no audit delta: audit is not rewritten
+      val hasAudit = store.exists("audit")
+      val audited = nReplaced > 0 || !hasAudit
+      if (audited) {
+        // restricting staging to the batch's keys leaves the raw_id join unchanged
+        val audit = StagingMerge.auditDiff(oldRows, updates)
+        store.stage("audit",
+          if (hasAudit) store.read("audit", schema("audit")).unionByName(audit) else audit)
+      }
+      val nStaging = Observation("staging")
       val staging = store.stage("staging",
         StagingMerge.merge(staging0, updates).observe(nStaging, count(lit(1)).as("n")))
 
@@ -576,16 +603,15 @@ object Main {
       // re-aggregating all of staging (IncrementalMartSpec proves
       // equality); dimension states are REF-COUNTED (DISTINCT is not
       // abelian — a departing row must not evict a name other rows use)
-      def state(name: String, delta: DataFrame => DataFrame,
-          init: DataFrame => DataFrame): DataFrame =
-        store.stage(name, if (store.exists(name)) delta(store.read(name)) else init(staging))
-      val finState = state("mart_financials_state",
-        IncrementalMart.applyDelta(_, oldRows, updates), IncrementalMart.initialize)
+      def state(name: String, delta: DataFrame => DataFrame): DataFrame =
+        store.stage(name,
+          if (store.exists(name)) delta(store.read(name, schema(name)))
+          else stateInit(name)(staging))
+      val finState = state("mart_financials_state", IncrementalMart.applyDelta(_, oldRows, updates))
       val clientsState = state("dim_clients_state",
-        IncrementalDims.applyClientsDelta(_, oldRows, updates), IncrementalDims.initializeClients)
-      def namesState(name: String, src: String): DataFrame = state(name,
-        IncrementalDims.applyNamesDelta(_, oldRows, updates, src),
-        IncrementalDims.initializeNames(_, src))
+        IncrementalDims.applyClientsDelta(_, oldRows, updates))
+      def namesState(name: String, src: String): DataFrame =
+        state(name, IncrementalDims.applyNamesDelta(_, oldRows, updates, src))
       val categoriesState = namesState("dim_categories_state", "category")
       val vendorsState = namesState("dim_vendors_state", "vendor")
       store.stage("mart_financials",
@@ -594,21 +620,18 @@ object Main {
       store.stage("mart_dim_clients", IncrementalDims.presentClients(clientsState))
       store.stage("mart_dim_categories", IncrementalDims.presentNames(categoriesState))
       store.stage("mart_dim_vendors", IncrementalDims.presentNames(vendorsState))
-      // month partitions the web mart must rebuild: new OR pre-update row
-      // months (an upsert that moves a row across months rewrites both)
-      store.stage(WebPending, updates.select(Views.webMonth(col("date")).as("month"))
-        .unionByName(oldRows.select(Views.webMonth(col("date")).as("month")))
-        .distinct())
+      store.stage(WebPending, webMonths.toSeq.sorted.toDF("month").coalesce(1))
 
       val n = nStaging.get("n").asInstanceOf[Long]
       Consumed.stage(store, consumedAfter(n))
 
       beforeCommit()
-      store.commitStaged(Seq("audit", "staging", "mart_financials_state",
-        "dim_clients_state", "dim_categories_state", "dim_vendors_state",
-        "mart_financials", "mart_expenses_by_category", "mart_dim_clients",
-        "mart_dim_categories", "mart_dim_vendors", WebPending, Consumed.Table))
-      refreshWebMart(store, root)
+      store.commitStaged((if (audited) Seq("audit") else Nil) ++ Seq("staging",
+        "mart_financials_state", "dim_clients_state", "dim_categories_state",
+        "dim_vendors_state", "mart_financials", "mart_expenses_by_category",
+        "mart_dim_clients", "mart_dim_categories", "mart_dim_vendors", WebPending,
+        Consumed.Table))
+      refreshWebMart(store, root, webMonths)
       println(s"[graft] run complete: $nAll changed rows, $n staging rows")
     } finally ParquetTableStore.deleteStoreDir(batchDir)
   }
@@ -619,23 +642,46 @@ object Main {
     */
   private[graft] val WebPending = "web_months_pending"
 
+  /** Each mart state table and the plan that builds it from a full
+    * staging snapshot (`runElt`'s first run).
+    */
+  private val stateInit: Map[String, DataFrame => DataFrame] = Map(
+    "mart_financials_state" -> (IncrementalMart.initialize(_)),
+    "dim_clients_state" -> (IncrementalDims.initializeClients(_)),
+    "dim_categories_state" -> (IncrementalDims.initializeNames(_, "category")),
+    "dim_vendors_state" -> (IncrementalDims.initializeNames(_, "vendor")))
+
+  private def emptyStaging(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Layers.staging)
+
+  /** The schema `runElt` and `load` declare for each table they read
+    * back, so no read starts a job to infer one from a Parquet footer:
+    * the layers from `Layers`, each mart state from the analyzed plan of
+    * its `stateInit` over an empty staging (analysis only, no job).
+    */
+  private[graft] def eltSchemas(spark: SparkSession): Map[String, StructType] = {
+    val staging = emptyStaging(spark)
+    Map("raw" -> Layers.raw, "staging" -> Layers.staging, "audit" -> Layers.audit,
+      WebPending -> new StructType().add("month", StringType)) ++
+      stateInit.map { case (name, init) => name -> init(staging).schema }
+  }
+
   /** Row-level query mart, maintained INCREMENTALLY at partition grain:
-    * only the pending month partitions are rebuilt from the published
+    * only the given month partitions are rebuilt from the published
     * staging (all of them on the first build); every other month's files
     * are untouched. Within each partition, Hilbert-cluster on (day,
     * client-hash) so date ranges AND client lookups both prune files by
     * min/max stats. Idempotent, so a run that crashed between its commit
     * and this rewrite is finished by the next run.
     */
-  private def refreshWebMart(store: ParquetTableStore, root: String): Unit = {
-    val months = store.read(WebPending).collect().map(_.getString(0)).toSeq
-    val webP = Views.webTransactionsP(store.read("staging"))
+  private def refreshWebMart(store: ParquetTableStore, root: String, months: Set[String]): Unit = {
+    val webP = Views.webTransactionsP(store.read("staging", Layers.staging))
     val webDelta =
-      if (store.exists("mart_web_transactions")) webP.where(col("month").isin(months: _*))
+      if (store.exists("mart_web_transactions")) webP.where(col("month").isin(months.toSeq: _*))
       else webP
     store.upsertPartitionsClustered("mart_web_transactions", webDelta, "month",
       datediff(col("date"), lit("1970-01-01").cast("date")),
-      pmod(xxhash64(col("client")), lit(1L << 20)))
+      pmod(xxhash64(col("client")), lit(1L << 20)), months)
     ParquetTableStore.deleteStoreDir(s"$root/$WebPending")
   }
 
@@ -671,7 +717,8 @@ object Main {
     // an append that adds no row adds no file either: every raw file is
     // one the change scan must read once
     if (store.exists("raw"))
-      store.appendIf("raw", appended(RawLoader.insertIfAbsent(store.read("raw"), incoming)))(
+      store.appendIf("raw",
+        appended(RawLoader.insertIfAbsent(store.read("raw", Layers.raw), incoming)))(
         obs.get("n").asInstanceOf[Long] > 0)
     else store.overwrite("raw", appended(incoming))
     RawLoader.archiveCsv(incoming, s"$root/archive",

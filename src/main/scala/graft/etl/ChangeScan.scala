@@ -33,8 +33,8 @@ object ChangeScan {
       .orderBy(col("extracted_at"), col("sheet_row_number"), col("payload_hash"))
     val perId = filtered.withColumn("__rn", row_number().over(first))
       .filter(col("__rn") === 1).drop("__rn")
-    val hashes = staging.select(col("payload_hash")).distinct()
-    perId.join(hashes, Seq("payload_hash"), "left_anti")
+    // a left-anti join ignores duplicates on its right side: no distinct
+    perId.join(staging.select(col("payload_hash")), Seq("payload_hash"), "left_anti")
   }
 
   /** Test-mode variant (ref src/transform.py:208-211; main.py:44):

@@ -3,6 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Storage abstraction for the layer tables (SURVEY §7.3): plain Parquet
   * with tmp-dir + atomic-swap rewrites. Isolates the upsert mechanics so an
@@ -59,6 +60,12 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
   override def read(name: String): DataFrame =
     spark.read.parquet(path(name))
 
+  /** Read with a declared schema: no Spark job infers one from a Parquet
+    * footer. File sources make every column nullable, as inference does.
+    */
+  def read(name: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(path(name))
+
   /** Write to a temp dir, then swap: the read path never observes a
     * half-written table (daily-batch contract; a lakehouse deployment
     * would use an ACID table format instead).
@@ -72,10 +79,12 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
     * tmp dir WITHOUT publishing it, and return a DataFrame over the
     * staged files — later staged tables can derive from this one (the
     * clusters → kept dependency) while the published table is untouched.
+    * The files are read back with the schema just written, so no job
+    * infers it from their footers.
     */
   override def stage(name: String, df: DataFrame): DataFrame = {
     df.write.mode(SaveMode.Overwrite).parquet(path(name + "__tmp"))
-    spark.read.parquet(path(name + "__tmp"))
+    spark.read.schema(df.schema).parquet(path(name + "__tmp"))
   }
 
   /** Publish a set of staged tables as ONE crash-safe group commit.
@@ -162,9 +171,9 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
   def dataFiles(name: String): Seq[String] =
     listNames(Paths.get(path(name))).filterNot(n => n.startsWith("_") || n.startsWith("."))
 
-  /** Read only the given data files of a plain table. */
-  def readFiles(name: String, files: Seq[String]): DataFrame =
-    spark.read.parquet(files.map(f => s"${path(name)}/$f"): _*)
+  /** Read only the given data files of a plain table, with its declared schema. */
+  def readFiles(name: String, files: Seq[String], schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(files.map(f => s"${path(name)}/$f"): _*)
 
   /** Stage a small table of text lines, written with plain file I/O (no
     * Spark job); `commitStaged` publishes it like any staged table.
@@ -320,12 +329,19 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
     * tight (a, b) rectangle and min/max stats prune on either key —
     * clustering quality matches overwriteClustered, paid only on the
     * delta. One shuffle of the delta, nothing else.
+    *
+    * A dynamic overwrite replaces only the partitions the write produces,
+    * so each of `partitions` the delta has no row for is deleted after
+    * it: the last row to leave a partition does not linger there. The
+    * written partitions are observed on the write, with no job of their
+    * own.
     */
   def upsertPartitionsClustered(name: String, delta: DataFrame,
       partitionCol: String, a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): Unit = {
-    import org.apache.spark.sql.functions.col
-    val clustered = delta
+      b: org.apache.spark.sql.Column, partitions: Set[String]): Unit = {
+    import org.apache.spark.sql.functions.{col, collect_set}
+    val written = org.apache.spark.sql.Observation(s"$name partitions")
+    val clustered = delta.observe(written, collect_set(col(partitionCol).cast("string")).as("p"))
       .withColumn("__z", graft.operators.Layout.hilbertValue(a, b))
       .repartitionByRange(col(partitionCol), col("__z"))
       .sortWithinPartitions(col(partitionCol), col("__z"))
@@ -334,6 +350,9 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol)
       .parquet(path(name))
+    (partitions -- written.get("p").asInstanceOf[Iterable[String]]).foreach(v =>
+      deleteRecursive(Paths.get(path(name), org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.getPartitionPathString(partitionCol, v))))
     spark.catalog.refreshByPath(path(name))
   }
 

@@ -65,11 +65,13 @@ object IncrementalDims {
   /** Replay of dimClientsV's DISTINCT ON over the state tuples: the window
     * input is the distinct tuple set, and row_number picks the same winner
     * (origin DESC — 'transaction' beats 'manual' — then newest updated_at).
+    * The dimension-sized state is read as ONE partition, so neither the
+    * window nor the sort needs an exchange or a sampling job.
     */
   def presentClients(state: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("name"))
       .orderBy(col("origin").desc, col("updated_at").desc_nulls_last)
-    state.select(col("name"), col("updated_at"), col("origin"))
+    state.coalesce(1).select(col("name"), col("updated_at"), col("origin"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
       .orderBy(col("name"))
@@ -95,7 +97,9 @@ object IncrementalDims {
       .agg(sum(col("refcount")).as("refcount"))
       .filter(col("refcount") > 0)
 
-  /** State grain is already one row per name — just the view's ordering. */
+  /** State grain is already one row per name — just the view's ordering,
+    * sorted in one partition like `presentClients`.
+    */
   def presentNames(state: DataFrame): DataFrame =
-    state.select(col("name")).orderBy(col("name"))
+    state.coalesce(1).select(col("name")).orderBy(col("name"))
 }

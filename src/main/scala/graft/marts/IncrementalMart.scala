@@ -59,9 +59,12 @@ object IncrementalMart {
       .filter(col("record_count") > 0) // groups whose last row left
   }
 
-  /** Presentation shape of the state — matches Views.financialsV rows. */
+  /** Presentation shape of the state — matches Views.financialsV rows.
+    * The state is month×type-sized, so it is read as ONE partition: the
+    * sort then needs no exchange and no range-bound sampling job.
+    */
   def present(mart: DataFrame): DataFrame =
-    mart.select(col("year_month"), col("type"),
+    mart.coalesce(1).select(col("year_month"), col("type"),
         round(col("sum_rub"), 0).cast(LongType).as("total_rub"),
         col("record_count"))
       .orderBy(col("year_month").desc, col("type"))

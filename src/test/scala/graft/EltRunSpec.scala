@@ -66,17 +66,38 @@ class EltRunSpec extends SparkTestBase {
   private def run(root: String, source: Option[String] = None, test: Boolean = false): String =
     out(Main.runElt(spark, root, source, test))
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+  /** Spark jobs started while `f` runs: all of them, and those that run
+    * outside any SQL execution (a Parquet footer's schema inference is
+    * one).
+    */
+  private def jobCounts(f: => Unit): (Int, Int) = {
+    val jobs, outside = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          outside.incrementAndGet()
+      }
     }
     Bridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     try { f; Bridge.drainListenerBus(spark) }
     finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
+    (jobs.get, outside.get)
+  }
+
+  private def jobsDuring(f: => Unit): Int = jobCounts(f)._1
+
+  /** Append to raw a new version of `id` with `field` set to `value`
+    * (`load` only inserts new ids).
+    */
+  private def appendEdit(root: String, id: String, field: String, value: String): Unit = {
+    import org.apache.spark.sql.functions.{lit, transform_values, when}
+    val edited = spark.read.parquet(s"$root/raw").filter($"id" === id)
+      .select($"sheet_row_number", transform_values($"payload",
+        (k, v) => when(k === field, lit(value)).otherwise(v)).as("payload"))
+    graft.etl.RawLoader.fromPayloads(edited, "sheet_test")
+      .write.mode("append").parquet(s"$root/raw")
   }
 
   private def topLevel(root: String): Set[String] = {
@@ -248,6 +269,82 @@ class EltRunSpec extends SparkTestBase {
     assert(EltRunSpec.files(s"$root/mart_web_transactions/month=2023-07") == july)
     assertMartsMatchStaging(root)
     assert(topLevel(root) == published)
+  }
+
+  test("runElt: an insert-only batch starts at most half its former jobs, none outside a SQL execution, and leaves audit untouched") {
+    val root = Files.createTempDirectory("graft_elt_budget").toString
+    Main.load(spark, root, csv(
+      "r1,16.07.2023,Расход,C1,Cat1,195103.50,RUB",
+      "r2,01.08.2023,Доход,C2,Cat2,\"50000,00\",RUB"), "sheet_test")
+    Main.runElt(spark, root, None, test = false)
+    val audit = EltRunSpec.files(s"$root/audit")
+
+    // a load onto an existing raw reads it with its declared schema
+    val (_, loadOutside) = jobCounts(Main.load(spark, root, csv(
+      "r3,02.08.2023,Расход,C3,Cat3,\"1000,00\",RUB"), "sheet_test"))
+    assert(loadOutside == 0, "load inferred a schema from a Parquet footer")
+    var line = ""
+    val (jobs, outside) = jobCounts { line = run(root) }
+    assert(line.contains("[graft] run complete: 1 changed rows, 3 staging rows"), line)
+    assert(outside == 0, "runElt inferred a schema from a Parquet footer")
+    // the same batch started 75 jobs before reads carried their schemas,
+    // presents ran in one task and insert-only batches skipped audit
+    assert(jobs <= 75 / 2, s"$jobs jobs")
+    assert(EltRunSpec.files(s"$root/audit") == audit, "an insert-only batch rewrote audit")
+    assertMartsMatchStaging(root)
+
+    // an edit appends exactly its one audit row
+    appendEdit(root, "r1", "Total RUB", "150,00")
+    assert(run(root).contains("[graft] run complete: 1 changed rows, 3 staging rows"))
+    assert(spark.read.parquet(s"$root/audit").select($"record_id").as[String].collect().toSeq ==
+      Seq("r1"))
+    assertMartsMatchStaging(root)
+    assert(topLevel(root) == published)
+  }
+
+  test("runElt: every schema the ELT path declares for a read equals the footer of what it wrote") {
+    val root = Files.createTempDirectory("graft_elt_schemas").toString
+    Main.load(spark, root, csv(
+      "r1,16.07.2023,Расход,C1,Cat1,195103.50,RUB",
+      "r2,01.08.2023,Доход,C2,Cat2,\"50000,00\",RUB"), "sheet_test")
+    Main.runElt(spark, root, None, test = false)
+    appendEdit(root, "r2", "Date", "02.09.2023")
+
+    val declared = Main.eltSchemas(spark)
+    val store = new ParquetTableStore(spark, root)
+    def check(name: String, dir: String): Unit =
+      assert(store.read(dir, declared(name)).schema == spark.read.parquet(s"$root/$dir").schema,
+        name)
+    // an edit batch stages every table the ELT path reads back, the
+    // pending web months (gone once the run ends) included; r2 moves to
+    // September and leaves August's web-mart partition with no row
+    var staged = Set.empty[String]
+    Main.runElt(spark, root, None, test = false, beforeCommit = () => {
+      staged = declared.keySet.filter(n => Files.exists(Paths.get(root, n + "__tmp")))
+      staged.foreach(n => check(n, n + "__tmp"))
+    })
+    assert(staged == declared.keySet - "raw")
+    check("raw", "raw")
+    assertMartsMatchStaging(root)
+  }
+
+  test("ParquetTableStore.stage returns the footer's schema") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = new StructType()
+      .add("id", LongType, nullable = false)
+      .add("m", MapType(StringType, StringType, valueContainsNull = false), nullable = false)
+      .add("amount", DecimalType(38, 10))
+      .add("at", TimestampType, nullable = false)
+      .add("tags", ArrayType(StringType, containsNull = false))
+      .add("note", StringType)
+    val df = spark.createDataFrame(java.util.List.of(
+      Row(1L, Map("k" -> "v"), BigDecimal("195103.5"),
+        java.sql.Timestamp.valueOf("2023-07-16 00:00:00"), Seq("a"), null)), schema)
+    val root = Files.createTempDirectory("graft_stage_schema").toString
+    val staged = new ParquetTableStore(spark, root).stage("t", df)
+    assert(staged.schema == spark.read.parquet(s"$root/t__tmp").schema)
+    assert(staged.collect().toSeq == df.collect().toSeq)
   }
 
   test("load: two loads of one source on one day keep both CSV archives") {

@@ -12,6 +12,28 @@ class PlanSpec extends SparkTestBase {
   private def planOf(df: DataFrame): String = df.queryExecution.executedPlan.toString
   private def q(name: String): DataFrame = SparkEntry.registry(name).fn(spark, sfTiny)
 
+  /** Run `f` over a private copy of the sf0.001 corpus dir, then delete
+    * the copy and the state `StateCache` built for it under its dedup
+    * root: that state's key carries the copy's path, so no later run can
+    * hit it.
+    */
+  private def withCorpusCopy(prefix: String)(f: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(s"$sfTiny/documents.parquet"),
+      java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    val key = "_" + dir.replaceAll("[^A-Za-z0-9.]", "_") + "_"
+    def built = Option(new java.io.File(graft.etl.StateCache.dedupRoot).listFiles()).toSeq
+      .flatten.filter(_.getName.contains(key))
+    try {
+      f(dir)
+      assert(built.nonEmpty, s"no state under ${graft.etl.StateCache.dedupRoot} for $dir")
+    } finally {
+      built.foreach(d => graft.etl.ParquetTableStore.deleteStoreDir(d.getPath))
+      graft.etl.ParquetTableStore.deleteStoreDir(dir)
+    }
+  }
+
   test("p2: filter and projection push into the parquet scan") {
     val p = planOf(q("p2_projection"))
     assert(p.contains("PushedFilters: [IsNotNull(o_orderstatus), EqualTo(o_orderstatus,O)]"), p)
@@ -421,19 +443,17 @@ class PlanSpec extends SparkTestBase {
     // hermetic corpus dir: other suites cache Tables.documents(sfTiny)
     // raw, and Spark's shared CacheManager could otherwise substitute
     // that cache here and change the printed plan with suite order.
-    val dir = java.nio.file.Files.createTempDirectory("graft-planspec").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfTiny/documents.parquet"),
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    for (name <- Seq("d23_indexed_pairs", "d24_indexed_containment")) {
-      val p = planOf(SparkEntry.registry(name).fn(spark, dir))
-      val docScanLines = p.split("\n").filter(l =>
-        l.contains("FileScan") && l.contains("documents.parquet"))
-      assert(docScanLines.isEmpty,
-        s"$name: corpus re-read leaked into the serve plan:\n${docScanLines.mkString("\n")}")
-      assert(p.contains("ExistingRDD"), s"$name: no pinned batch scan\n$p")
-      assert(p.contains("graft-dedup-state"), s"$name: no index-table scan\n$p")
-      assert(!p.contains("CartesianProduct"), s"$name:\n$p")
+    withCorpusCopy("graft-planspec") { dir =>
+      for (name <- Seq("d23_indexed_pairs", "d24_indexed_containment")) {
+        val p = planOf(SparkEntry.registry(name).fn(spark, dir))
+        val docScanLines = p.split("\n").filter(l =>
+          l.contains("FileScan") && l.contains("documents.parquet"))
+        assert(docScanLines.isEmpty,
+          s"$name: corpus re-read leaked into the serve plan:\n${docScanLines.mkString("\n")}")
+        assert(p.contains("ExistingRDD"), s"$name: no pinned batch scan\n$p")
+        assert(p.contains("graft-dedup-state"), s"$name: no index-table scan\n$p")
+        assert(!p.contains("CartesianProduct"), s"$name:\n$p")
+      }
     }
   }
 
@@ -443,19 +463,17 @@ class PlanSpec extends SparkTestBase {
     // (localCheckpoint), so the serve plan reads ONLY the ExistingRDD
     // and the stored band table — a documents.parquet FileScan would be
     // a corpus-shaped re-read in the per-batch cost.
-    val dir = java.nio.file.Files.createTempDirectory("graft-planspec-band").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfTiny/documents.parquet"),
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    for (name <- Seq("d28_indexed_simhash", "d29_indexed_bbit")) {
-      val p = planOf(SparkEntry.registry(name).fn(spark, dir))
-      val docScanLines = p.split("\n").filter(l =>
-        l.contains("FileScan") && l.contains("documents.parquet"))
-      assert(docScanLines.isEmpty,
-        s"$name: corpus re-read leaked into the serve plan:\n${docScanLines.mkString("\n")}")
-      assert(p.contains("ExistingRDD"), s"$name: no pinned batch scan\n$p")
-      assert(p.contains("graft-dedup-state"), s"$name: no stored band-table scan\n$p")
-      assert(!p.contains("CartesianProduct"), s"$name:\n$p")
+    withCorpusCopy("graft-planspec-band") { dir =>
+      for (name <- Seq("d28_indexed_simhash", "d29_indexed_bbit")) {
+        val p = planOf(SparkEntry.registry(name).fn(spark, dir))
+        val docScanLines = p.split("\n").filter(l =>
+          l.contains("FileScan") && l.contains("documents.parquet"))
+        assert(docScanLines.isEmpty,
+          s"$name: corpus re-read leaked into the serve plan:\n${docScanLines.mkString("\n")}")
+        assert(p.contains("ExistingRDD"), s"$name: no pinned batch scan\n$p")
+        assert(p.contains("graft-dedup-state"), s"$name: no stored band-table scan\n$p")
+        assert(!p.contains("CartesianProduct"), s"$name:\n$p")
+      }
     }
   }
 
@@ -465,23 +483,21 @@ class PlanSpec extends SparkTestBase {
     // RDD lineage) must read ONLY the pinned batch (ExistingRDD) and the
     // stored suffix table; a documents.parquet FileScan here would be a
     // corpus re-read leaking into the per-batch cost.
-    val dir = java.nio.file.Files.createTempDirectory("graft-planspec-sfx").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfTiny/documents.parquet"),
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, dir)
-    val idx = graft.operators.SuffixIndexStore.ensure(spark, dir,
-      docs.filter(col("doc_id") % 2 === 0), minLen = 8, maxLen = 32)
-    val p = planOf(graft.operators.SuffixIndexStore.serveUnion(idx,
-      docs.filter(col("doc_id") % 2 === 1)))
-    val docScanLines = p.split("\n").filter(l =>
-      l.contains("FileScan") && l.contains("documents.parquet"))
-    assert(docScanLines.isEmpty,
-      s"corpus re-read leaked into the serve stage:\n${docScanLines.mkString("\n")}")
-    assert(p.contains("ExistingRDD"), s"no pinned batch scan\n$p")
-    assert(p.contains("graft-dedup-state"), s"no stored suffix-table scan\n$p")
-    assert(!p.contains("CartesianProduct"), p)
+    withCorpusCopy("graft-planspec-sfx") { dir =>
+      import org.apache.spark.sql.functions.col
+      val docs = Tables.documents(spark, dir)
+      val idx = graft.operators.SuffixIndexStore.ensure(spark, dir,
+        docs.filter(col("doc_id") % 2 === 0), minLen = 8, maxLen = 32)
+      val p = planOf(graft.operators.SuffixIndexStore.serveUnion(idx,
+        docs.filter(col("doc_id") % 2 === 1)))
+      val docScanLines = p.split("\n").filter(l =>
+        l.contains("FileScan") && l.contains("documents.parquet"))
+      assert(docScanLines.isEmpty,
+        s"corpus re-read leaked into the serve stage:\n${docScanLines.mkString("\n")}")
+      assert(p.contains("ExistingRDD"), s"no pinned batch scan\n$p")
+      assert(p.contains("graft-dedup-state"), s"no stored suffix-table scan\n$p")
+      assert(!p.contains("CartesianProduct"), p)
+    }
   }
 
   test("d23/d24: stored index tables join from their bucket layout — no exchange on the stored side") {
