@@ -1,5 +1,7 @@
 package graft.app
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -477,7 +479,7 @@ object Main {
     *     table (the reference writes nothing either,
     *     src/transform.py:200-334); a plain run still publishes the fresh
     *     files into the consumed set;
-    *  4. staging, the four mart states, the five mart presents, the web
+    *  4. staging, the five mart states, the five mart presents, the web
     *     mart's pending months (staged from the observed set) and the
     *     consumed set are staged and published as ONE journaled group
     *     commit: a crash before it leaves every table at its pre-run
@@ -492,7 +494,9 @@ object Main {
     *     rewritten in place from the published staging (`refreshWebMart`).
     *
     * Every read declares its schema (`eltSchemas`), so no Spark job infers
-    * one from a Parquet footer.
+    * one from a Parquet footer. A run that reads fewer than
+    * `CompiledFromBytes` (its fresh raw files plus staging) plans with no
+    * generated code (`sized`).
     *
     * `--source` and `--test` runs leave fresh rows unapplied (another
     * source's, or past the 100-row limit), so they never add files to the
@@ -503,19 +507,37 @@ object Main {
     */
   def runElt(spark: SparkSession, root: String, source: Option[String], test: Boolean,
       beforeCommit: () => Unit = () => ()): Unit = {
+    val store = new ParquetTableStore(spark, root)
+    require(store.exists("raw"), s"no raw layer under $root — run `load` first")
+    val (hasStaging, _, fresh) = pending(store)
+    val bytes = store.fileBytes("raw", fresh) +
+      (if (hasStaging) store.fileBytes("staging", store.dataFiles("staging")) else 0L)
+    sized(spark, bytes)(runEltOn(spark, root, source, test, beforeCommit))
+  }
+
+  /** Whether `store` has staging, the consumed set committed with it (none
+    * without one), and the raw files that set does not list: directory
+    * listings, no Spark job.
+    */
+  private def pending(
+      store: ParquetTableStore): (Boolean, Option[ChangeScan.Consumed], Seq[String]) = {
+    val hasStaging = store.exists("staging")
+    val consumed = if (hasStaging) ChangeScan.Consumed.read(store) else None
+    (hasStaging, consumed, ChangeScan.fresh(store, consumed))
+  }
+
+  /** `runElt`'s batch on the given session, whatever the input's size. */
+  private[graft] def runEltOn(spark: SparkSession, root: String, source: Option[String],
+      test: Boolean, beforeCommit: () => Unit): Unit = {
     import ChangeScan.Consumed
     import org.apache.spark.sql.Observation
     import spark.implicits._
     val store = new ParquetTableStore(spark, root)
-    require(store.exists("raw"), s"no raw layer under $root — run `load` first")
     val schema = eltSchemas(spark)
     // finish the web-mart refresh of a run that crashed after its commit
     if (store.exists(WebPending)) refreshWebMart(store, root,
       store.read(WebPending, schema(WebPending)).as[String].collect().toSet)
-    val hasStaging = store.exists("staging")
-    // the set describes the staging it was committed with; none without one
-    val consumed = if (hasStaging) Consumed.read(store) else None
-    val fresh = ChangeScan.fresh(store, consumed)
+    val (hasStaging, consumed, fresh) = pending(store)
     def stagingRows = consumed.fold(store.read("staging", schema("staging")).count())(_.stagingRows)
     if (fresh.isEmpty && hasStaging) {
       println(s"[graft] run complete: 0 changed rows, $stagingRows staging rows")
@@ -614,9 +636,12 @@ object Main {
         state(name, IncrementalDims.applyNamesDelta(_, oldRows, updates, src))
       val categoriesState = namesState("dim_categories_state", "category")
       val vendorsState = namesState("dim_vendors_state", "vendor")
+      val expensesState = state("mart_expenses_by_category_state",
+        IncrementalMart.applyCategoryDelta(_, oldRows, updates))
       store.stage("mart_financials",
         IncrementalMart.present(finState).withColumn("last_updated", current_timestamp()))
-      store.stage("mart_expenses_by_category", Views.expensesByCategoryV(staging))
+      store.stage("mart_expenses_by_category", IncrementalMart.presentCategories(expensesState)
+        .withColumn("last_updated", current_timestamp()))
       store.stage("mart_dim_clients", IncrementalDims.presentClients(clientsState))
       store.stage("mart_dim_categories", IncrementalDims.presentNames(categoriesState))
       store.stage("mart_dim_vendors", IncrementalDims.presentNames(vendorsState))
@@ -628,13 +653,33 @@ object Main {
       beforeCommit()
       store.commitStaged((if (audited) Seq("audit") else Nil) ++ Seq("staging",
         "mart_financials_state", "dim_clients_state", "dim_categories_state",
-        "dim_vendors_state", "mart_financials", "mart_expenses_by_category",
-        "mart_dim_clients", "mart_dim_categories", "mart_dim_vendors", WebPending,
-        Consumed.Table))
+        "dim_vendors_state", "mart_expenses_by_category_state", "mart_financials",
+        "mart_expenses_by_category", "mart_dim_clients", "mart_dim_categories",
+        "mart_dim_vendors", WebPending, Consumed.Table))
       refreshWebMart(store, root, webMonths)
       println(s"[graft] run complete: $nAll changed rows, $n staging rows")
     } finally ParquetTableStore.deleteStoreDir(batchDir)
   }
+
+  /** Input bytes from which `load` and `runElt` run compiled. A run that
+    * reads less plans with no generated code (`Bridge.interpreted`): a
+    * fresh process spends much of a small batch's CPU compiling generated
+    * classes (Janino) and JIT-compiling them, while the interpreted
+    * operators are compiled once for every plan. Past the crossover,
+    * interpreted evaluation costs more per row than compiling saves.
+    * Fresh-JVM backfills of growing size crossed at about 5.5 MB of input
+    * (README, "ELT runs: small inputs plan interpreted").
+    */
+  private[graft] val CompiledFromBytes: Long = 4L << 20
+
+  /** Runs an ELT step that reads `inputBytes`: below `CompiledFromBytes`
+    * with `spark` planning no generated code (`Bridge.interpreted`, which
+    * gives `spark` its confs back after a return or a throw), from it
+    * compiled as `spark` is set.
+    */
+  private def sized[T](spark: SparkSession, inputBytes: Long)(body: => T): T =
+    if (inputBytes >= CompiledFromBytes) body
+    else org.apache.spark.sql.graftbridge.Bridge.interpreted(spark)(body)
 
   /** Month partitions of `mart_web_transactions` a committed run still
     * has to rewrite; published with the run's group commit and removed
@@ -649,7 +694,8 @@ object Main {
     "mart_financials_state" -> (IncrementalMart.initialize(_)),
     "dim_clients_state" -> (IncrementalDims.initializeClients(_)),
     "dim_categories_state" -> (IncrementalDims.initializeNames(_, "category")),
-    "dim_vendors_state" -> (IncrementalDims.initializeNames(_, "vendor")))
+    "dim_vendors_state" -> (IncrementalDims.initializeNames(_, "vendor")),
+    "mart_expenses_by_category_state" -> (IncrementalMart.initializeCategories(_)))
 
   private def emptyStaging(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Layers.staging)
@@ -689,6 +735,19 @@ object Main {
     * append with insert-if-absent + duplicate warnings + CSV archive.
     */
   def load(spark: SparkSession, root: String, csvPath: String, source: String): Unit = {
+    val store = new ParquetTableStore(spark, root)
+    // a path this process cannot list (a glob, a remote URI) runs compiled
+    val csvBytes = if (!Files.exists(Paths.get(csvPath))) CompiledFromBytes else {
+      val s = Files.walk(Paths.get(csvPath))
+      try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum() finally s.close()
+    }
+    val rawBytes = if (store.exists("raw")) store.fileBytes("raw", store.dataFiles("raw")) else 0L
+    sized(spark, csvBytes + rawBytes)(loadOn(spark, root, csvPath, source))
+  }
+
+  /** `load` on the given session, whatever the input's size. */
+  private[graft] def loadOn(spark: SparkSession, root: String, csvPath: String,
+      source: String): Unit = {
     val store = new ParquetTableStore(spark, root)
     val csv = spark.read.option("header", "true").csv(csvPath).na.fill("")
     val headers = RawLoader.fixHeaders(csv.columns.toSeq)

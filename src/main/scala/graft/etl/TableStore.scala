@@ -171,6 +171,10 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
   def dataFiles(name: String): Seq[String] =
     listNames(Paths.get(path(name))).filterNot(n => n.startsWith("_") || n.startsWith("."))
 
+  /** Total size in bytes of the given data files of a plain table. */
+  def fileBytes(name: String, files: Seq[String]): Long =
+    files.map(f => Files.size(Paths.get(path(name), f))).sum
+
   /** Read only the given data files of a plain table, with its declared schema. */
   def readFiles(name: String, files: Seq[String], schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(files.map(f => s"${path(name)}/$f"): _*)

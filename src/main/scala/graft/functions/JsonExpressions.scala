@@ -23,6 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * this expression IS the contract.
   */
 abstract class SortedKeyJson extends UnaryExpression with CodegenFallback {
+  import SortedKeyJson.Hex
 
   override def dataType: DataType = StringType
 
@@ -32,6 +33,27 @@ abstract class SortedKeyJson extends UnaryExpression with CodegenFallback {
   protected def asciiOnly: Boolean
   /** default separators (", ", ": ") vs compact (",", ":") */
   protected def spaced: Boolean
+
+  /** Positions of `keys` in ascending binary (= code-point) order, equal
+    * keys in input order: a binary insertion sort over primitive ints. A
+    * payload has a few dozen keys, so the shifts cost less than boxing
+    * every index for a generic stable sort.
+    */
+  private def sortedIndex(keys: Array[UTF8String]): Array[Int] = {
+    val idx = new Array[Int](keys.length)
+    var i = 0
+    while (i < keys.length) {
+      var lo = 0; var hi = i // insert after every key <= keys(i)
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (keys(idx(mid)).compareTo(keys(i)) <= 0) lo = mid + 1 else hi = mid
+      }
+      System.arraycopy(idx, lo, idx, lo + 1, i - lo)
+      idx(lo) = i
+      i += 1
+    }
+    idx
+  }
 
   private def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
     sb.append('"')
@@ -47,7 +69,9 @@ abstract class SortedKeyJson extends UnaryExpression with CodegenFallback {
         case '\f' => sb.append("\\f")
         case '\r' => sb.append("\\r")
         case _ =>
-          if (c < ' ' || (asciiOnly && c > '~')) sb.append(f"\\u${c.toInt}%04x")
+          if (c < ' ' || (asciiOnly && c > '~'))
+            sb.append('\\').append('u').append(Hex((c >> 12) & 0xf)).append(Hex((c >> 8) & 0xf))
+              .append(Hex((c >> 4) & 0xf)).append(Hex(c & 0xf))
           else sb.append(c)
       }
       i += 1
@@ -58,24 +82,29 @@ abstract class SortedKeyJson extends UnaryExpression with CodegenFallback {
   override protected def nullSafeEval(input: Any): Any = {
     val m = input.asInstanceOf[MapData]
     val n = m.numElements()
-    val keys = m.keyArray(); val vals = m.valueArray()
-    val idx = Array.range(0, n) // binary compare = code-point order
-      .sortWith((a, b) => keys.getUTF8String(a).compareTo(keys.getUTF8String(b)) < 0)
+    val keys = Array.tabulate(n)(m.keyArray().getUTF8String)
+    val vals = m.valueArray()
+    val idx = sortedIndex(keys)
     val sb = new java.lang.StringBuilder(64)
     sb.append('{')
-    var first = true
-    idx.foreach { i =>
-      if (!first) { sb.append(','); if (spaced) sb.append(' ') }
-      first = false
-      appendEscaped(sb, keys.getUTF8String(i).toString)
+    var j = 0
+    while (j < n) {
+      val i = idx(j)
+      if (j > 0) { sb.append(','); if (spaced) sb.append(' ') }
+      appendEscaped(sb, keys(i).toString)
       sb.append(':')
       if (spaced) sb.append(' ')
       if (vals.isNullAt(i)) sb.append("null")
       else appendEscaped(sb, vals.getUTF8String(i).toString)
+      j += 1
     }
     sb.append('}')
     UTF8String.fromString(sb.toString)
   }
+}
+
+object SortedKeyJson {
+  private val Hex = "0123456789abcdef".toCharArray // CPython's \\u escape is lower-case
 }
 
 case class CanonicalJson(child: Expression) extends SortedKeyJson {

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types._
   * possibly-null keys (Spark join keys treat NULL ≠ NULL).
   *
   * Scale: the state table holds |distinct tuples| rows (dimension-sized,
-  * ≪ staging); a run costs one batch-sized agg + one state-grain shuffle —
+  * ≪ staging); a run costs one aggregate over the state and the batch's
+  * signed tuples, one state-grain shuffle —
   * the reference recomputes these views from full staging on every read,
   * which at 100 TB is a full-table DISTINCT per dashboard refresh.
   */
@@ -30,37 +31,39 @@ object IncrementalDims {
 
   private val clientKey = Seq("name", "updated_at", "origin")
 
-  /** Signed tuple counts of a staging-shaped batch, clients grain.
-    * Mirrors Views.dimClientsV's union EXACTLY: explicit ref rows keep
-    * their received_at and 'manual' origin; every non-empty client value
-    * (including on ref rows) contributes a ('transaction', NULL) tuple.
+  /** One signed tuple per contribution of a staging-shaped batch, clients
+    * grain. Mirrors Views.dimClientsV's union EXACTLY: explicit ref rows
+    * keep their received_at and 'manual' origin; every non-empty client
+    * value (including on ref rows) contributes a ('transaction', NULL)
+    * tuple.
     */
   private def clientTuples(rows: DataFrame, sign: Int): DataFrame = {
     val explicit = rows
       .filter(col("source_type") === "ref_clients")
       .select(col("client").as("name"), col("received_at").as("updated_at"),
-        lit("manual").as("origin"))
+        lit("manual").as("origin"), lit(sign.toLong).as("refcount"))
     val implicit_ = rows
       .filter(col("client").isNotNull && col("client") =!= "")
       .select(col("client").as("name"), lit(null).cast(TimestampType).as("updated_at"),
-        lit("transaction").as("origin"))
+        lit("transaction").as("origin"), lit(sign.toLong).as("refcount"))
     explicit.unionByName(implicit_)
-      .groupBy(clientKey.map(col): _*)
-      .agg((lit(sign) * count(lit(1))).as("refcount"))
   }
 
-  def initializeClients(staging: DataFrame): DataFrame = clientTuples(staging, 1)
-
-  /** Apply one upsert batch to the clients state: same (oldRows, newRows)
-    * snapshot pair as IncrementalMart.applyDelta.
-    */
-  def applyClientsDelta(state: DataFrame, oldRows: DataFrame, newRows: DataFrame): DataFrame =
-    state
-      .unionByName(clientTuples(newRows, 1))
-      .unionByName(clientTuples(oldRows, -1))
-      .groupBy(clientKey.map(col): _*)
+  /** Sum the signed counts per tuple; tuples whose count reaches zero leave. */
+  private def fold(tuples: DataFrame, key: Seq[String]): DataFrame =
+    tuples.groupBy(key.map(col): _*)
       .agg(sum(col("refcount")).as("refcount"))
       .filter(col("refcount") > 0)
+
+  def initializeClients(staging: DataFrame): DataFrame = fold(clientTuples(staging, 1), clientKey)
+
+  /** Apply one upsert batch to the clients state: same (oldRows, newRows)
+    * snapshot pair as IncrementalMart.applyDelta. State ∪ signed tuples,
+    * one aggregate.
+    */
+  def applyClientsDelta(state: DataFrame, oldRows: DataFrame, newRows: DataFrame): DataFrame =
+    fold(state.unionByName(clientTuples(newRows, 1)).unionByName(clientTuples(oldRows, -1)),
+      clientKey)
 
   /** Replay of dimClientsV's DISTINCT ON over the state tuples: the window
     * input is the distinct tuple set, and row_number picks the same winner
@@ -82,20 +85,15 @@ object IncrementalDims {
   private def nameTuples(rows: DataFrame, src: String, sign: Int): DataFrame =
     rows
       .filter(col(src).isNotNull && col(src) =!= "")
-      .groupBy(col(src).as("name"))
-      .agg((lit(sign) * count(lit(1))).as("refcount"))
+      .select(col(src).as("name"), lit(sign.toLong).as("refcount"))
 
   def initializeNames(staging: DataFrame, src: String): DataFrame =
-    nameTuples(staging, src, 1)
+    fold(nameTuples(staging, src, 1), Seq("name"))
 
   def applyNamesDelta(state: DataFrame, oldRows: DataFrame, newRows: DataFrame,
       src: String): DataFrame =
-    state
-      .unionByName(nameTuples(newRows, src, 1))
-      .unionByName(nameTuples(oldRows, src, -1))
-      .groupBy(col("name"))
-      .agg(sum(col("refcount")).as("refcount"))
-      .filter(col("refcount") > 0)
+    fold(state.unionByName(nameTuples(newRows, src, 1))
+      .unionByName(nameTuples(oldRows, src, -1)), Seq("name"))
 
   /** State grain is already one row per name — just the view's ordering,
     * sorted in one partition like `presentClients`.

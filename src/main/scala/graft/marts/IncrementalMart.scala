@@ -19,45 +19,47 @@ import graft.functions.Parsers.monthBucket
   *
   * State schema: (year_month, type, sum_rub DECIMAL(38,10), record_count).
   * Presentation (`present`) applies ROUND()::BIGINT like the view.
-  * Cost per run: one agg over the delta (tiny) + one outer join against
-  * the mart keyed on (year_month, type) — a few hundred groups, broadcast.
+  * Cost per run: one aggregate over the state and the batch's signed rows,
+  * keyed on (year_month, type) — a few hundred groups, one exchange.
   */
 object IncrementalMart {
 
   private val keyCols = Seq("year_month", "type")
 
-  /** Group contributions of a staging-shaped batch, signed. */
-  private def contributions(rows: DataFrame, sign: Int): DataFrame =
+  /** One signed row per staging-shaped row: its group key, its amount
+    * (negated for a departing row; multiplying by a literal sign would cut
+    * the decimal's scale to 6) and ±1 to the group's count.
+    */
+  private def signedRows(rows: DataFrame, sign: Int): DataFrame =
     rows
       .filter(col("type").isin(financialTypes: _*) &&
         coalesce(col("payment_date"), col("date")) >= lit("2005-01-01").cast(TimestampType))
-      .groupBy(monthBucket(coalesce(col("payment_date"), col("date"))).as("year_month"),
-        col("type"))
-      .agg((lit(sign) * sum(col("total_rub"))).cast(DecimalType(38, 10)).as("sum_rub"),
-        (lit(sign) * count(lit(1))).as("record_count"))
+      .select(Seq(monthBucket(coalesce(col("payment_date"), col("date"))).as("year_month"),
+        col("type")) ++ signedMeasures(sign): _*)
+
+  private def signedMeasures(sign: Int): Seq[org.apache.spark.sql.Column] = Seq(
+    (if (sign > 0) col("total_rub") else -col("total_rub")).cast(DecimalType(38, 10)).as("sum_rub"),
+    lit(sign.toLong).as("record_count"))
+
+  /** Sum state rows and signed rows per key; groups whose last row left
+    * are dropped.
+    */
+  private def fold(rows: DataFrame, keys: Seq[String]): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(sum(col("sum_rub")).cast(DecimalType(38, 10)).as("sum_rub"),
+        sum(col("record_count")).as("record_count"))
+      .filter(col("record_count") > 0)
 
   /** Fresh mart state from a full staging snapshot (bootstrap / repair). */
-  def initialize(staging: DataFrame): DataFrame = contributions(staging, 1)
+  def initialize(staging: DataFrame): DataFrame = fold(signedRows(staging, 1), keyCols)
 
   /** Apply one upsert batch: `oldRows` are the previous versions of the
     * keys being replaced (empty for pure inserts), `newRows` the incoming
     * versions — exactly the pair StagingMerge.auditDiff sees, read from
-    * the same snapshot.
+    * the same snapshot. State ∪ signed rows, one aggregate: one exchange.
     */
-  def applyDelta(mart: DataFrame, oldRows: DataFrame, newRows: DataFrame): DataFrame = {
-    val delta = contributions(newRows, 1).unionByName(contributions(oldRows, -1))
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum(col("sum_rub")).cast(DecimalType(38, 10)).as("d_sum"),
-        sum(col("record_count")).as("d_n"))
-    mart.join(delta, keyCols, "full_outer")
-      .select(
-        col("year_month"), col("type"),
-        (coalesce(col("sum_rub"), lit(0)) + coalesce(col("d_sum"), lit(0)))
-          .cast(DecimalType(38, 10)).as("sum_rub"),
-        (coalesce(col("record_count"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
-          .as("record_count"))
-      .filter(col("record_count") > 0) // groups whose last row left
-  }
+  def applyDelta(mart: DataFrame, oldRows: DataFrame, newRows: DataFrame): DataFrame =
+    fold(mart.unionByName(signedRows(newRows, 1)).unionByName(signedRows(oldRows, -1)), keyCols)
 
   /** Presentation shape of the state — matches Views.financialsV rows.
     * The state is month×type-sized, so it is read as ONE partition: the
@@ -71,34 +73,24 @@ object IncrementalMart {
 
   // ───── expenses-by-category (same abelian-group shape, one key) ─────
 
-  private def categoryContributions(rows: DataFrame, sign: Int): DataFrame =
+  private def categoryRows(rows: DataFrame, sign: Int): DataFrame =
     rows
       .filter(col("type").isin("Расход", "Expense"))
-      .groupBy(coalesce(col("category"), lit("Uncategorized")).as("category"))
-      .agg((lit(sign) * sum(col("total_rub"))).cast(DecimalType(38, 10)).as("sum_rub"),
-        (lit(sign) * count(lit(1))).as("record_count"))
+      .select(coalesce(col("category"), lit("Uncategorized")).as("category") +:
+        signedMeasures(sign): _*)
 
   def initializeCategories(staging: DataFrame): DataFrame =
-    categoryContributions(staging, 1)
+    fold(categoryRows(staging, 1), Seq("category"))
 
-  def applyCategoryDelta(mart: DataFrame, oldRows: DataFrame, newRows: DataFrame): DataFrame = {
-    val delta = categoryContributions(newRows, 1)
-      .unionByName(categoryContributions(oldRows, -1))
-      .groupBy(col("category"))
-      .agg(sum(col("sum_rub")).cast(DecimalType(38, 10)).as("d_sum"),
-        sum(col("record_count")).as("d_n"))
-    mart.join(delta, Seq("category"), "full_outer")
-      .select(col("category"),
-        (coalesce(col("sum_rub"), lit(0)) + coalesce(col("d_sum"), lit(0)))
-          .cast(DecimalType(38, 10)).as("sum_rub"),
-        (coalesce(col("record_count"), lit(0L)) + coalesce(col("d_n"), lit(0L)))
-          .as("record_count"))
-      .filter(col("record_count") > 0)
-  }
+  def applyCategoryDelta(mart: DataFrame, oldRows: DataFrame, newRows: DataFrame): DataFrame =
+    fold(mart.unionByName(categoryRows(newRows, 1)).unionByName(categoryRows(oldRows, -1)),
+      Seq("category"))
 
-  /** Presentation — matches Views.expensesByCategoryV rows. */
+  /** Presentation — matches Views.expensesByCategoryV rows, in one task
+    * over the category-sized state like `present`.
+    */
   def presentCategories(mart: DataFrame): DataFrame =
-    mart.select(col("category"),
+    mart.coalesce(1).select(col("category"),
         round(col("sum_rub"), 0).cast(LongType).as("total_rub"),
         col("record_count"))
       .orderBy(col("total_rub").desc)

@@ -13,6 +13,38 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Runs `body` with `spark` planning no generated code: whole-stage
+    * codegen off and every expression, projection and ordering in its
+    * interpreted form. The confs ride on every job the body starts, SQL or
+    * not, so task-side code reads them too, and `spark` gets its own values
+    * back after a return or a throw. The confs are named through their
+    * `SQLConf` entries, so a Spark that renames them fails the build.
+    *
+    * The same session, not a `cloneSession()`: each session has its own
+    * artifact classloader on the executors, which keys the codegen cache,
+    * so a clone per run recompiles every row-format class Spark generates
+    * even with codegen off (hash-aggregate row joiners, window orderings,
+    * partition-value projections). Measured on a two-row backfill and a
+    * one-row insert: 20 compiles every time with a clone per run, none
+    * after the first time on one session.
+    */
+  def interpreted[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.internal.SQLConf
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.conf
+    val keys = Seq(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, SQLConf.CODEGEN_FACTORY_MODE.key)
+    val saved = keys.map(k => k -> (if (conf.contains(k)) Some(conf.getConfString(k)) else None))
+    conf.setConf(SQLConf.WHOLESTAGE_CODEGEN_ENABLED, false)
+    conf.setConf(SQLConf.CODEGEN_FACTORY_MODE, CodegenObjectFactoryMode.NO_CODEGEN)
+    try SQLExecution.withSQLConfPropagated(session)(body)
+    finally saved.foreach {
+      case (k, Some(v)) => conf.setConfString(k, v)
+      case (k, None) => conf.unsetConf(k)
+    }
+  }
+
   /** Block until every queued listener event is delivered — the metrics
     * a SparkListener accumulates are only consistent after the bus
     * drains (`SparkContext.listenerBus` is private[spark]; this shim

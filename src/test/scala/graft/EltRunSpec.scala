@@ -4,8 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.app.Main
 import graft.etl.{ChangeScan, ParquetTableStore}
@@ -39,6 +41,8 @@ class EltRunSpec extends SparkTestBase {
         "vendors" -> Views.dimVendorsV _).foreach { case (d, view) =>
       assert(rows(spark.read.parquet(s"$root/mart_dim_$d")) == rows(view(staging)), d)
     }
+    assert(rows(spark.read.parquet(s"$root/mart_expenses_by_category").drop("last_updated")) ==
+      rows(Views.expensesByCategoryV(staging).drop("last_updated")))
     val web = Views.webTransactionsP(staging)
     assert(rows(spark.read.parquet(s"$root/mart_web_transactions").select(web.columns.map(
       org.apache.spark.sql.functions.col): _*)) == rows(web))
@@ -46,9 +50,18 @@ class EltRunSpec extends SparkTestBase {
 
   private val published = Set("raw", "archive", "audit", "staging",
     "mart_financials_state", "dim_clients_state", "dim_categories_state",
-    "dim_vendors_state", "mart_financials", "mart_expenses_by_category",
-    "mart_dim_clients", "mart_dim_categories", "mart_dim_vendors",
+    "dim_vendors_state", "mart_expenses_by_category_state", "mart_financials",
+    "mart_expenses_by_category", "mart_dim_clients", "mart_dim_categories", "mart_dim_vendors",
     "mart_web_transactions", ChangeScan.Consumed.Table)
+
+  /** The caller's whole-stage and expression codegen confs, which the
+    * test session leaves at Spark's defaults.
+    */
+  private def codegenConfs: (String, String) =
+    (spark.conf.get(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key),
+      spark.conf.get(SQLConf.CODEGEN_FACTORY_MODE.key))
+  private val codegenDefaults = (SQLConf.WHOLESTAGE_CODEGEN_ENABLED.defaultValueString,
+    SQLConf.CODEGEN_FACTORY_MODE.defaultValueString)
 
   private def consumed(root: String): Option[ChangeScan.Consumed] =
     ChangeScan.Consumed.read(new ParquetTableStore(spark, root))
@@ -105,6 +118,80 @@ class EltRunSpec extends SparkTestBase {
     try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
   }
 
+  test("load + runElt below CompiledFromBytes compile no generated code and leave the caller's confs as they were") {
+    val backfill = csv(
+      "r1,16.07.2023,Расход,C1,Cat1,195103.50,RUB",
+      "r2,01.08.2023,Доход,C2,Cat2,\"50000,00\",RUB")
+    val insert = csv("r3,02.08.2023,Расход,C3,Cat3,\"1000,00\",RUB")
+    def backfillAndInsert(root: String): Unit = Seq(backfill, insert).foreach { dir =>
+      Main.load(spark, root, dir, "sheet_test")
+      Main.runElt(spark, root, None, test = false)
+    }
+    // Spark generates a few row-format classes even with codegen off (hash-
+    // aggregate row joiners, orderings, partition-value projections); the
+    // session's first small runs compile and cache them
+    backfillAndInsert(Files.createTempDirectory("graft_elt_warm").toString)
+
+    val root = Files.createTempDirectory("graft_elt_interpreted").toString
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // every job of the runs carries the interpreted confs
+    val plannedBy = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        plannedBy.add((e.properties.getProperty(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key),
+          e.properties.getProperty(SQLConf.CODEGEN_FACTORY_MODE.key)))
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try { backfillAndInsert(root); Bridge.drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(EltRunSpec.files(root).keys.map(p => Files.size(Paths.get(root).resolve(p))).sum <
+      Main.CompiledFromBytes)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles, "a class was compiled")
+    assert(plannedBy.asScala == Set(("false", "NO_CODEGEN")))
+    assert(codegenConfs == codegenDefaults)
+    assertMartsMatchStaging(root)
+  }
+
+  test("runElt: interpreted and compiled runs of a backfill, an insert and an edit write the same rows") {
+    val roots = Seq("interpreted", "compiled").map(m =>
+      m -> Files.createTempDirectory(s"graft_elt_$m").toString).toMap
+    def batch(root: String, compiled: Boolean)(load: Option[String], edit: => Unit): Unit = {
+      load.foreach(dir =>
+        if (compiled) Main.loadOn(spark, root, dir, "sheet_test")
+        else Main.load(spark, root, dir, "sheet_test"))
+      edit
+      if (compiled) Main.runEltOn(spark, root, None, test = false, () => ())
+      else Main.runElt(spark, root, None, test = false)
+    }
+    val backfill = csv(
+      "r1,16.07.2023,Расход,C1,Cat1,195103.50,RUB",
+      "r2,01.08.2023,Доход,C2,Cat2,\"50000,00\",RUB",
+      "r3,02.08.2023,Expense,Клиент,,\"1 000,25\",RUB",
+      "r4,20.07.2023,Income,C1,Cat1,not a number,RUB")
+    val insert = csv("r5,02.09.2023,Расход,C3,Cat3,\"10,50\",RUB")
+    roots.foreach { case (mode, root) =>
+      val compiled = mode == "compiled"
+      batch(root, compiled)(Some(backfill), ())
+      batch(root, compiled)(Some(insert), ())
+      batch(root, compiled)(None, appendEdit(root, "r3", "Total RUB", "7,00"))
+      assertMartsMatchStaging(root)
+    }
+    // load-time stamps differ between the two roots by construction
+    val stamps = Set("extracted_at", "last_seen", "received_at", "changed_at", "last_updated")
+    val tables = topLevel(roots("compiled")) -- Set("archive", ChangeScan.Consumed.Table)
+    assert(tables == topLevel(roots("interpreted")) -- Set("archive", ChangeScan.Consumed.Table))
+    assert(tables.contains("audit"))
+    tables.foreach { t =>
+      val Seq(a, b) = Seq("interpreted", "compiled").map { m =>
+        val df = spark.read.parquet(s"${roots(m)}/$t")
+        rows(df.drop(df.columns.filter(stamps): _*))
+      }
+      assert(a == b, t)
+    }
+    assert(spark.read.parquet(s"${roots("compiled")}/audit").count() == 1)
+  }
+
   test("runElt: a crash before the group commit leaves every table as it was; the next run applies the batch once") {
     val root = Files.createTempDirectory("graft_elt_crash").toString
     Main.load(spark, root, csv(
@@ -124,6 +211,7 @@ class EltRunSpec extends SparkTestBase {
         beforeCommit = () => throw new RuntimeException("injected crash"))
     }
     assert(crash.getMessage == "injected crash")
+    assert(codegenConfs == codegenDefaults, "the crash left the caller's codegen confs changed")
     // staged tables wait in their __tmp dirs; every published file is
     // untouched — no state advanced without its staging
     val after = EltRunSpec.files(root).filter { case (p, _) => !p.getName(0).toString.endsWith("__tmp") }
@@ -213,8 +301,9 @@ class EltRunSpec extends SparkTestBase {
       "r1,16.07.2023,Расход,C1,Cat1,195103.50,RUB",
       "r2,01.08.2023,Доход,C2,Cat2,\"50000,00\",RUB"), "sheet_test")
     Main.runElt(spark, root, None, test = false)
-    // a root written before the consumed set existed
+    // a root written before the consumed set and the expenses state existed
     ParquetTableStore.deleteStoreDir(s"$root/${ChangeScan.Consumed.Table}")
+    ParquetTableStore.deleteStoreDir(s"$root/mart_expenses_by_category_state")
     Main.load(spark, root, csv(
       "r3,02.08.2023,Расход,C3,Cat3,\"1000,00\",RUB",
       "r4,20.07.2023,Доход,C1,Cat1,\"10,50\",RUB"), "sheet_test")
@@ -288,8 +377,10 @@ class EltRunSpec extends SparkTestBase {
     assert(line.contains("[graft] run complete: 1 changed rows, 3 staging rows"), line)
     assert(outside == 0, "runElt inferred a schema from a Parquet footer")
     // the same batch started 75 jobs before reads carried their schemas,
-    // presents ran in one task and insert-only batches skipped audit
-    assert(jobs <= 75 / 2, s"$jobs jobs")
+    // presents ran in one task and insert-only batches skipped audit; 37
+    // before each mart-state delta became one aggregate and the expenses
+    // mart came from its own state
+    assert(jobs <= 28, s"$jobs jobs")
     assert(EltRunSpec.files(s"$root/audit") == audit, "an insert-only batch rewrote audit")
     assertMartsMatchStaging(root)
 

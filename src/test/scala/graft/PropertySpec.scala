@@ -68,6 +68,65 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("CanonicalJson and PyDefaultJson equal their boxed-sort, Formatter-escape formulation (ScalaCheck)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
+    import org.apache.spark.sql.types.{MapType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import org.scalacheck.{Gen, Prop, Test}
+    import graft.functions.{CanonicalJson, PyDefaultJson}
+
+    // the kernel as first written: indices boxed through sortWith, escapes
+    // through java.util.Formatter
+    def reference(kvs: Seq[(String, String)], asciiOnly: Boolean, spaced: Boolean): String = {
+      def esc(s: String): String = s.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case '\b' => "\\b"
+        case '\t' => "\\t"
+        case '\n' => "\\n"
+        case '\f' => "\\f"
+        case '\r' => "\\r"
+        case c if c < ' ' || (asciiOnly && c > '~') => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      }
+      Array.range(0, kvs.size)
+        .sortWith((a, b) => UTF8String.fromString(kvs(a)._1).compareTo(
+          UTF8String.fromString(kvs(b)._1)) < 0)
+        .map { i =>
+          val (k, v) = kvs(i)
+          "\"" + esc(k) + "\":" + (if (spaced) " " else "") +
+            (if (v == null) "null" else "\"" + esc(v) + "\"")
+        }.mkString("{", if (spaced) ", " else ",", "}")
+    }
+    val unit: Gen[String] = Gen.frequency(
+      3 -> Gen.choose(' ', '~').map(_.toString),
+      2 -> Gen.choose('\u0000', '\u001f').map(_.toString),
+      1 -> Gen.oneOf("\"", "\\", "\u007f", "é", "ü"),
+      3 -> Gen.choose('а', 'я').map(_.toString),
+      1 -> Gen.oneOf("😀", "𝄞", "\ud83d\ude80"))
+    val text: Gen[String] = Gen.choose(0, 6).flatMap(Gen.listOfN(_, unit)).map(_.mkString)
+    // few prefixes, so keys share them (and now and then repeat)
+    val key: Gen[String] = for (p <- Gen.oneOf("", "a", "ab", "Колонка", "😀"); t <- text) yield p + t
+    val pairs: Gen[Seq[(String, String)]] = Gen.choose(0, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(key, Gen.frequency(9 -> text, 1 -> Gen.const(null: String)))))
+    val input = BoundReference(0, MapType(StringType, StringType), nullable = false)
+    val prop = Prop.forAll(pairs) { kvs =>
+      val row = InternalRow(ArrayBasedMapData(
+        kvs.map(kv => UTF8String.fromString(kv._1)).toArray[Any],
+        kvs.map(kv => UTF8String.fromString(kv._2)).toArray[Any]))
+      CanonicalJson(input).eval(row).toString == reference(kvs, asciiOnly = false, spaced = false) &&
+        PyDefaultJson(input).eval(row).toString == reference(kvs, asciiOnly = true, spaced = true)
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(2000)
+      .withInitialSeed(20261019L), prop)
+    assert(result.passed, result.status.toString)
+    // the empty map, also pinned to its literal output
+    assert(CanonicalJson(input).eval(InternalRow(ArrayBasedMapData(Array.empty[Any],
+      Array.empty[Any]))).toString == "{}")
+  }
+
   test("merge: idempotent, convergent, and last-writer-wins") {
     val existing = (1 to 50).map(i => (s"k$i", java.sql.Timestamp.valueOf("2023-01-01 00:00:00"), s"old$i"))
       .toDF("raw_id", "received_at", "payload_hash")
