@@ -495,8 +495,8 @@ object Main {
     *
     * Every read declares its schema (`eltSchemas`), so no Spark job infers
     * one from a Parquet footer. A run that reads fewer than
-    * `CompiledFromBytes` (its fresh raw files plus staging) plans with no
-    * generated code (`sized`).
+    * `CompiledFromBytes` (its fresh raw files, staging and audit) plans
+    * with no generated code (`sized`).
     *
     * `--source` and `--test` runs leave fresh rows unapplied (another
     * source's, or past the 100-row limit), so they never add files to the
@@ -509,26 +509,30 @@ object Main {
       beforeCommit: () => Unit = () => ()): Unit = {
     val store = new ParquetTableStore(spark, root)
     require(store.exists("raw"), s"no raw layer under $root — run `load` first")
-    val (hasStaging, _, fresh) = pending(store)
-    val bytes = store.fileBytes("raw", fresh) +
-      (if (hasStaging) store.fileBytes("staging", store.dataFiles("staging")) else 0L)
-    sized(spark, bytes)(runEltOn(spark, root, source, test, beforeCommit))
+    val input @ (_, _, fresh) = pending(store)
+    def bytes(table: String) =
+      if (store.exists(table)) store.fileBytes(table, store.dataFiles(table)) else 0L
+    sized(spark, store.fileBytes("raw", fresh) + bytes("staging") + bytes("audit"))(
+      runEltOn(spark, root, source, test, beforeCommit, input))
   }
 
   /** Whether `store` has staging, the consumed set committed with it (none
     * without one), and the raw files that set does not list: directory
     * listings, no Spark job.
     */
-  private def pending(
+  private[graft] def pending(
       store: ParquetTableStore): (Boolean, Option[ChangeScan.Consumed], Seq[String]) = {
     val hasStaging = store.exists("staging")
     val consumed = if (hasStaging) ChangeScan.Consumed.read(store) else None
     (hasStaging, consumed, ChangeScan.fresh(store, consumed))
   }
 
-  /** `runElt`'s batch on the given session, whatever the input's size. */
+  /** `runElt`'s batch over `pending`'s listing of `root`, on the given
+    * session, whatever the input's size.
+    */
   private[graft] def runEltOn(spark: SparkSession, root: String, source: Option[String],
-      test: Boolean, beforeCommit: () => Unit): Unit = {
+      test: Boolean, beforeCommit: () => Unit,
+      input: (Boolean, Option[ChangeScan.Consumed], Seq[String])): Unit = {
     import ChangeScan.Consumed
     import org.apache.spark.sql.Observation
     import spark.implicits._
@@ -537,7 +541,7 @@ object Main {
     // finish the web-mart refresh of a run that crashed after its commit
     if (store.exists(WebPending)) refreshWebMart(store, root,
       store.read(WebPending, schema(WebPending)).as[String].collect().toSet)
-    val (hasStaging, consumed, fresh) = pending(store)
+    val (hasStaging, consumed, fresh) = input
     def stagingRows = consumed.fold(store.read("staging", schema("staging")).count())(_.stagingRows)
     if (fresh.isEmpty && hasStaging) {
       println(s"[graft] run complete: 0 changed rows, $stagingRows staging rows")
@@ -668,7 +672,10 @@ object Main {
     * operators are compiled once for every plan. Past the crossover,
     * interpreted evaluation costs more per row than compiling saves.
     * Fresh-JVM backfills of growing size crossed at about 5.5 MB of input
-    * (README, "ELT runs: small inputs plan interpreted").
+    * (README, "ELT runs: small inputs plan interpreted"). That table, one
+    * or two runs per size, is all this constant and the compiled side
+    * rest on: `elt_incremental` reads about 0.1 MB per run, so the
+    * benchmark measures only the interpreted side.
     */
   private[graft] val CompiledFromBytes: Long = 4L << 20
 

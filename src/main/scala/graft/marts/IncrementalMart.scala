@@ -41,14 +41,16 @@ object IncrementalMart {
     (if (sign > 0) col("total_rub") else -col("total_rub")).cast(DecimalType(38, 10)).as("sum_rub"),
     lit(sign.toLong).as("record_count"))
 
-  /** Sum state rows and signed rows per key; groups whose last row left
-    * are dropped.
+  /** Sum state rows and signed rows per key (the amount and every count
+    * column); groups whose last row left are dropped.
     */
-  private def fold(rows: DataFrame, keys: Seq[String]): DataFrame =
+  private def fold(rows: DataFrame, keys: Seq[String]): DataFrame = {
+    val counts = rows.columns.toSeq.diff(keys :+ "sum_rub")
     rows.groupBy(keys.map(col): _*)
       .agg(sum(col("sum_rub")).cast(DecimalType(38, 10)).as("sum_rub"),
-        sum(col("record_count")).as("record_count"))
+        counts.map(c => sum(col(c)).as(c)): _*)
       .filter(col("record_count") > 0)
+  }
 
   /** Fresh mart state from a full staging snapshot (bootstrap / repair). */
   def initialize(staging: DataFrame): DataFrame = fold(signedRows(staging, 1), keyCols)
@@ -72,12 +74,18 @@ object IncrementalMart {
       .orderBy(col("year_month").desc, col("type"))
 
   // ───── expenses-by-category (same abelian-group shape, one key) ─────
+  //
+  // State schema: (category, sum_rub, record_count, amount_count). A sum
+  // alone cannot tell a category whose amounts are all NULL (the view's
+  // SUM is NULL) from one whose amounts sum to 0 after a row left, so the
+  // state also counts the non-NULL amounts.
 
   private def categoryRows(rows: DataFrame, sign: Int): DataFrame =
     rows
       .filter(col("type").isin("Расход", "Expense"))
-      .select(coalesce(col("category"), lit("Uncategorized")).as("category") +:
-        signedMeasures(sign): _*)
+      .select(Seq(coalesce(col("category"), lit("Uncategorized")).as("category")) ++
+        signedMeasures(sign) :+
+        when(col("total_rub").isNotNull, lit(sign.toLong)).otherwise(0L).as("amount_count"): _*)
 
   def initializeCategories(staging: DataFrame): DataFrame =
     fold(categoryRows(staging, 1), Seq("category"))
@@ -91,7 +99,7 @@ object IncrementalMart {
     */
   def presentCategories(mart: DataFrame): DataFrame =
     mart.coalesce(1).select(col("category"),
-        round(col("sum_rub"), 0).cast(LongType).as("total_rub"),
+        when(col("amount_count") > 0, round(col("sum_rub"), 0).cast(LongType)).as("total_rub"),
         col("record_count"))
       .orderBy(col("total_rub").desc)
 }

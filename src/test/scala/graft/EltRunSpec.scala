@@ -161,7 +161,8 @@ class EltRunSpec extends SparkTestBase {
         if (compiled) Main.loadOn(spark, root, dir, "sheet_test")
         else Main.load(spark, root, dir, "sheet_test"))
       edit
-      if (compiled) Main.runEltOn(spark, root, None, test = false, () => ())
+      if (compiled) Main.runEltOn(spark, root, None, test = false, () => (),
+        Main.pending(new ParquetTableStore(spark, root)))
       else Main.runElt(spark, root, None, test = false)
     }
     val backfill = csv(
@@ -337,6 +338,28 @@ class EltRunSpec extends SparkTestBase {
         line))
     assert(r1Total == 100.0)
     assert(spark.read.parquet(s"$root/audit").count() == 0)
+    assertMartsMatchStaging(root)
+  }
+
+  test("runElt: a category whose last non-NULL amount moves away shows a NULL total, as the view does") {
+    val root = Files.createTempDirectory("graft_elt_null_amount").toString
+    Main.load(spark, root, csv(
+      "r1,16.07.2023,Расход,C1,Cat1,not a number,RUB",
+      "r2,17.07.2023,Расход,C1,Cat1,\"100,00\",RUB"), "sheet_test")
+    Main.runElt(spark, root, None, test = false)
+    def cat1: Seq[String] = spark.read.parquet(s"$root/mart_expenses_by_category")
+      .filter($"category" === "Cat1").select($"total_rub", $"record_count")
+      .collect().map(_.toString).toSeq
+    assert(cat1 == Seq("[100,2]"))
+    // r2 leaves Cat1 with only r1's NULL amount: +100 − 100 sums to 0,
+    // the view's SUM over r1 alone is NULL
+    appendEdit(root, "r2", "Category", "Cat2")
+    assert(run(root).contains("[graft] run complete: 1 changed rows, 2 staging rows"))
+    assert(cat1 == Seq("[null,1]"))
+    assertMartsMatchStaging(root)
+    appendEdit(root, "r2", "Category", "Cat1")
+    assert(run(root).contains("[graft] run complete: 1 changed rows, 2 staging rows"))
+    assert(cat1 == Seq("[100,2]"))
     assertMartsMatchStaging(root)
   }
 
