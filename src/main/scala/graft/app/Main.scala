@@ -628,10 +628,13 @@ object Main {
       // contributions apply to the persisted state instead of
       // re-aggregating all of staging (IncrementalMartSpec proves
       // equality); dimension states are REF-COUNTED (DISTINCT is not
-      // abelian — a departing row must not evict a name other rows use)
+      // abelian — a departing row must not evict a name other rows use).
+      // A state whose files lack a column its schema declares (written
+      // before the column existed) is rebuilt from the merged staging.
       def state(name: String, delta: DataFrame => DataFrame): DataFrame =
         store.stage(name,
-          if (store.exists(name)) delta(store.read(name, schema(name)))
+          if (store.exists(name) && schema(name).fieldNames.forall(store.footerColumns(name).contains))
+            delta(store.read(name, schema(name)))
           else stateInit(name)(staging))
       val finState = state("mart_financials_state", IncrementalMart.applyDelta(_, oldRows, updates))
       val clientsState = state("dim_clients_state",
@@ -975,13 +978,7 @@ object Main {
   }
 
   def indexAppend(spark: SparkSession, embPath: String, out: String): Unit = {
-    import graft.operators.VectorIndexStore
-    val emb = spark.read.parquet(embPath)
-    indexKind(out) match {
-      case "ivfpq" => VectorIndexStore.appendIvfPq(spark, out, emb)
-      case "ivf"   => VectorIndexStore.appendIvf(spark, out, emb)
-      case _       => VectorIndexStore.appendPq(spark, out, emb)
-    }
+    graft.operators.VectorIndexStore.append(spark, out, spark.read.parquet(embPath))
     val n = spark.read.parquet(s"$out/codes").count()
     println(s"[graft] index append: now $n vectors in $out")
   }
@@ -990,7 +987,7 @@ object Main {
       resOut: String, k: Int): Long = {
     import graft.operators.VectorIndexStore
     val q = spark.read.parquet(queriesPath)
-    val res = indexKind(idx) match {
+    val res = VectorIndexStore.kind(idx) match {
       case "ivfpq" => VectorIndexStore.ivfPqTopK(spark, idx, q, k)
       case "ivf"   => VectorIndexStore.ivfTopK(spark, idx, q, k)
       case _       => VectorIndexStore.pqTopK(spark, idx, q, k)
@@ -999,17 +996,6 @@ object Main {
     val n = spark.read.parquet(resOut).count()
     println(s"[graft] index query: ${n} result rows -> $resOut (k=$k)")
     n
-  }
-
-  /** Stored-index flavor from its on-disk artifacts: IVFPQ carries both
-    * centroids and codebooks, plain IVF only centroids, PQ only
-    * codebooks. (The old two-way check misrouted a plain-IVF index to
-    * the IVFPQ reader.)
-    */
-  private def indexKind(idx: String): String = {
-    val cents = java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "centroids"))
-    val cbs = java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "codebooks"))
-    if (cents && cbs) "ivfpq" else if (cents) "ivf" else "pq"
   }
 
   /** Containment dedup as a product command: drop docs ≥ threshold
@@ -1219,11 +1205,7 @@ object Main {
     val store = new ParquetTableStore(spark, idx)
     val outStore = new ParquetTableStore(spark, out)
     val batch = spark.read.parquet(batchPath)
-    val pairs =
-      if (containment)
-        DedupIndexStore.containmentIncremental(store, batch, n = 3, threshold)
-      else DedupIndexStore.pairsIncremental(store, batch, n = 3, threshold)
-    outStore.overwrite("pairs", pairs)
+    outStore.overwrite("pairs", DedupIndexStore.serve(store, batch, threshold, containment))
     if (append) DedupIndexStore.append(store, batch)
     val nPairs = outStore.read("pairs").count()
     val kind = if (containment) "containment" else "near-dup"

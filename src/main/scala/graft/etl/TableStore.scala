@@ -14,19 +14,6 @@ trait TableStore {
   def read(name: String): DataFrame
   def overwrite(name: String, df: DataFrame): Unit
   def append(name: String, df: DataFrame): Unit
-
-  /** Stage a table for a group commit (`commitStaged`), returning a
-    * DataFrame over the staged data so later staged tables can derive
-    * from it without recomputation. Default buffers in memory and
-    * commits as per-table overwrites (each atomic, the GROUP not);
-    * ParquetTableStore overrides with a journaled roll-forward that
-    * makes the whole group crash-atomic.
-    */
-  private val stagedBuf = scala.collection.mutable.Map.empty[String, DataFrame]
-  def stage(name: String, df: DataFrame): DataFrame = { stagedBuf(name) = df; df }
-  def commitStaged(names: Seq[String]): Unit = names.foreach { n =>
-    overwrite(n, stagedBuf.remove(n).getOrElse(sys.error(s"$n was not staged")))
-  }
 }
 
 object ParquetTableStore {
@@ -82,7 +69,7 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
     * The files are read back with the schema just written, so no job
     * infers it from their footers.
     */
-  override def stage(name: String, df: DataFrame): DataFrame = {
+  def stage(name: String, df: DataFrame): DataFrame = {
     df.write.mode(SaveMode.Overwrite).parquet(path(name + "__tmp"))
     spark.read.schema(df.schema).parquet(path(name + "__tmp"))
   }
@@ -94,7 +81,7 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
     * readers never observe a torn subset — e.g. new `clusters` beside old
     * `kept` (the pair the incremental dedup CLIs commit together).
     */
-  override def commitStaged(names: Seq[String]): Unit = {
+  def commitStaged(names: Seq[String]): Unit = {
     recover() // a stale journal would fail the CREATE_NEW claim below
     names.foreach { n =>
       require(Files.exists(Paths.get(path(n + "__tmp"))), s"$n was not staged")
@@ -170,6 +157,19 @@ final class ParquetTableStore(spark: SparkSession, root: String) extends TableSt
     */
   def dataFiles(name: String): Seq[String] =
     listNames(Paths.get(path(name))).filterNot(n => n.startsWith("_") || n.startsWith("."))
+
+  /** Column names in the footer of one data file of a plain table (a
+    * file read on the driver, no Spark job); empty when it has no file.
+    */
+  def footerColumns(name: String): Seq[String] = dataFiles(name).headOption.toSeq.flatMap { f =>
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(path(name), f), spark.sparkContext.hadoopConfiguration))
+    try reader.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+    finally reader.close()
+  }
 
   /** Total size in bytes of the given data files of a plain table. */
   def fileBytes(name: String, files: Seq[String]): Long =

@@ -429,6 +429,15 @@ object DedupIndexStore {
       shingleSets(inc, n), cands, minJaccard)
   }
 
+  /** A batch's served pair delta: near-dup pairs at `threshold` Jaccard,
+    * or with `containment` the containment pairs (`dedupidx serve` and
+    * its stream twin).
+    */
+  def serve(store: ParquetTableStore, batch: DataFrame, threshold: Double,
+      containment: Boolean): DataFrame =
+    if (containment) containmentIncremental(store, batch, n = 3, threshold)
+    else pairsIncremental(store, batch, n = 3, threshold)
+
   /** Containment pair delta for an arriving batch vs the indexed corpus —
     * `containmentPairsIncremental` semantics, batch-sized work only:
     * (batch prefixes × stored ∪ batch postings) plus (stored prefixes ×

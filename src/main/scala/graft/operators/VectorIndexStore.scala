@@ -107,6 +107,26 @@ object VectorIndexStore {
         readCodebooks(spark, p(path, "codebooks")))
       .write.mode("append").parquet(p(path, "codes"))
 
+  /** Stored-index flavor from its on-disk artifacts: IVFPQ carries both
+    * centroids and codebooks, plain IVF only centroids, PQ only
+    * codebooks. (A two-way check misrouted a plain-IVF index to the
+    * IVFPQ reader.)
+    */
+  def kind(path: String): String = {
+    val cents = java.nio.file.Files.exists(java.nio.file.Paths.get(path, "centroids"))
+    val cbs = java.nio.file.Files.exists(java.nio.file.Paths.get(path, "codebooks"))
+    if (cents && cbs) "ivfpq" else if (cents) "ivf" else "pq"
+  }
+
+  /** Encode a batch into the stored index of whatever `kind` it is, with
+    * its frozen quantizers (`index append` and its stream twin).
+    */
+  def append(spark: SparkSession, path: String, batch: DataFrame): Unit = kind(path) match {
+    case "ivfpq" => appendIvfPq(spark, path, batch)
+    case "ivf"   => appendIvf(spark, path, batch)
+    case _       => appendPq(spark, path, batch)
+  }
+
   def ivfPqTopK(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nprobe: Int = 4, refine: Int = 32): DataFrame =
     PqIndex.ivfPqTopKIndexed(queries, spark.read.parquet(p(path, "codes")),

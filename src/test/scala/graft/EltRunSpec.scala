@@ -104,11 +104,13 @@ class EltRunSpec extends SparkTestBase {
   /** Append to raw a new version of `id` with `field` set to `value`
     * (`load` only inserts new ids).
     */
-  private def appendEdit(root: String, id: String, field: String, value: String): Unit = {
+  private def appendEdit(root: String, id: String, field: String, value: String,
+      more: (String, String)*): Unit = {
     import org.apache.spark.sql.functions.{lit, transform_values, when}
     val edited = spark.read.parquet(s"$root/raw").filter($"id" === id)
-      .select($"sheet_row_number", transform_values($"payload",
-        (k, v) => when(k === field, lit(value)).otherwise(v)).as("payload"))
+      .select($"sheet_row_number", transform_values($"payload", (k, v) =>
+        ((field -> value) +: more).foldLeft(v) { case (w, (f, x)) => when(k === f, lit(x)).otherwise(w) })
+        .as("payload"))
     graft.etl.RawLoader.fromPayloads(edited, "sheet_test")
       .write.mode("append").parquet(s"$root/raw")
   }
@@ -302,15 +304,20 @@ class EltRunSpec extends SparkTestBase {
       "r1,16.07.2023,Расход,C1,Cat1,195103.50,RUB",
       "r2,01.08.2023,Доход,C2,Cat2,\"50000,00\",RUB"), "sheet_test")
     Main.runElt(spark, root, None, test = false)
-    // a root written before the consumed set and the expenses state existed
+    // a root written before the consumed set, the expenses state and the
+    // financials state's amount_count existed
     ParquetTableStore.deleteStoreDir(s"$root/${ChangeScan.Consumed.Table}")
     ParquetTableStore.deleteStoreDir(s"$root/mart_expenses_by_category_state")
+    val store = new ParquetTableStore(spark, root)
+    store.overwrite("mart_financials_state",
+      store.read("mart_financials_state").drop("amount_count"))
     Main.load(spark, root, csv(
       "r3,02.08.2023,Расход,C3,Cat3,\"1000,00\",RUB",
       "r4,20.07.2023,Доход,C1,Cat1,\"10,50\",RUB"), "sheet_test")
 
     assert(run(root).contains("[graft] run complete: 2 changed rows, 4 staging rows"))
     assert(consumed(root).contains(ChangeScan.Consumed(rawFiles(root), 4)))
+    assert(store.footerColumns("mart_financials_state").contains("amount_count"))
     assertMartsMatchStaging(root)
     assert(topLevel(root) == published)
     var line = ""
@@ -350,16 +357,19 @@ class EltRunSpec extends SparkTestBase {
     def cat1: Seq[String] = spark.read.parquet(s"$root/mart_expenses_by_category")
       .filter($"category" === "Cat1").select($"total_rub", $"record_count")
       .collect().map(_.toString).toSeq
-    assert(cat1 == Seq("[100,2]"))
-    // r2 leaves Cat1 with only r1's NULL amount: +100 − 100 sums to 0,
-    // the view's SUM over r1 alone is NULL
-    appendEdit(root, "r2", "Category", "Cat2")
+    def july: Seq[String] = spark.read.parquet(s"$root/mart_financials")
+      .filter($"year_month" === "2023-07").select($"total_rub", $"record_count")
+      .collect().map(_.toString).toSeq
+    assert(cat1 == Seq("[100,2]") && july == Seq("[100,2]"))
+    // r2 leaves Cat1 and (2023-07, Расход) with only r1's NULL amount:
+    // +100 − 100 sums to 0, the views' SUM over r1 alone is NULL
+    appendEdit(root, "r2", "Category", "Cat2", "Date" -> "17.08.2023")
     assert(run(root).contains("[graft] run complete: 1 changed rows, 2 staging rows"))
-    assert(cat1 == Seq("[null,1]"))
+    assert(cat1 == Seq("[null,1]") && july == Seq("[null,1]"))
     assertMartsMatchStaging(root)
-    appendEdit(root, "r2", "Category", "Cat1")
+    appendEdit(root, "r2", "Category", "Cat1", "Date" -> "17.07.2023")
     assert(run(root).contains("[graft] run complete: 1 changed rows, 2 staging rows"))
-    assert(cat1 == Seq("[100,2]"))
+    assert(cat1 == Seq("[100,2]") && july == Seq("[100,2]"))
     assertMartsMatchStaging(root)
   }
 

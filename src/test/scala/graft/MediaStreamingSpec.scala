@@ -1,13 +1,36 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftprobe.Blocks
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
+import org.scalatest.Outcome
 
+import graft.etl.ParquetTableStore
 import graft.multimodal.Media
 import graft.streaming.Streams
 
 class MediaStreamingSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** The `graft*` entries of the temp root that a test created (its
+    * stores, arrival dirs and checkpoints) are deleted when it ends.
+    */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val before = tempEntries()
+    try super.withFixture(test)
+    finally (tempEntries() -- before).foreach(p => ParquetTableStore.deleteStoreDir(p.toString))
+  }
+
+  private def tempEntries(): Set[Path] = {
+    val s = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("graft")).toSet
+    finally s.close()
+  }
 
   test("media feature extraction is deterministic and md5-correct") {
     val media = Seq(
@@ -987,5 +1010,87 @@ class MediaStreamingSpec extends SparkTestBase {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(fromState == fromWindows)
     assert(fromState.nonEmpty)
+  }
+
+  test("guarded stream twins leave none of the blocks they pinned in the block manager") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    val tmp = Files.createTempDirectory("graft_pins").toString
+    val store = new ParquetTableStore(spark, s"$tmp/state")
+    val sc = spark.sparkContext
+    val before = Blocks.rddIds(sc)
+    // hold every RDD persisted while the twins run, so that the
+    // ContextCleaner cannot drop a pin's blocks when its RDD happens to be
+    // garbage-collected: only an explicit release removes them
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val holder = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        sc.getPersistentRDDs.values.foreach(held.add)
+    }
+    sc.addSparkListener(holder)
+    // two waves, then a full replay on a new checkpoint (every batch the
+    // guard empties)
+    def waves(rows: DataFrame, key: Column, dir: String)(run: String => StreamingQuery): Unit = {
+      rows.filter(key % 2 === 0).write.mode("append").parquet(dir)
+      run(s"$dir.ckpt").awaitTermination(120000)
+      rows.filter(key % 2 === 1).write.mode("append").parquet(dir)
+      run(s"$dir.ckpt").awaitTermination(120000)
+      run(s"$dir.ckpt2").awaitTermination(120000)
+    }
+    try {
+      waves(Tables.embeddings(spark, sfTiny), $"vec_id", s"$tmp/emb")(
+        Streams.pcaStream(spark, s"$tmp/emb", store, _))
+      waves(Tables.lineitem(spark, sfTiny), $"l_orderkey", s"$tmp/li")(
+        Streams.q1MartStream(spark, s"$tmp/li", store, _))
+      waves(Tables.documents(spark, sfTiny), $"doc_id", s"$tmp/docs")(
+        Streams.noveltyStream(spark, s"$tmp/docs", store, _))
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
+    } finally sc.removeSparkListener(holder)
+    assert(Seq("pca_stats", "q1_state", "novelty_scores").forall(store.exists),
+      "a twin absorbed nothing: vacuous")
+    assert(!held.isEmpty, "no pin was held: vacuous")
+    val left = Blocks.rddIds(sc) -- before
+    assert(left.isEmpty, s"RDD blocks left pinned: $left")
+  }
+
+  test("q1 mart stream: a batch whose step failed after its state writes, or that is re-delivered after its commit, applies once") {
+    import graft.marts.TpchMart
+    val li = Tables.lineitem(spark, sfTiny)
+    val tmp = Files.createTempDirectory("graft_q1crash").toString
+    val store = new ParquetTableStore(spark, s"$tmp/state")
+    val (dir, ckpt) = (s"$tmp/arrivals", s"$tmp/ckpt")
+    def run(): Long = {
+      val q = Streams.q1MartStream(spark, dir, store, ckpt)
+      q.awaitTermination(120000)
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    def rendered() = TpchMart.renderQ1(store.read("q1_state")).collect().map(_.toString).toSeq
+    val one = TpchMart.renderQ1(TpchMart.q1Partials(li)).collect().map(_.toString).toSeq
+    li.filter($"l_orderkey" % 2 === 0).write.mode("append").parquet(dir)
+    run()
+    // wave 2's step fails at its group commit, after staging q1_state and
+    // q1_seen: a directory where the commit journal goes makes the
+    // commit's journal read throw
+    li.filter($"l_orderkey" % 2 === 1).write.mode("append").parquet(dir)
+    val journal = Paths.get(tmp, "state", "_graft_commit_journal")
+    Files.createDirectory(journal)
+    intercept[StreamingQueryException](run())
+    assert(Files.exists(Paths.get(tmp, "state", "q1_state__tmp")),
+      "the step failed before its first state write")
+    Files.delete(journal)
+    // the same checkpoint re-delivers wave 2, which applies once
+    assert(run() > 0, "wave 2 was not re-delivered")
+    assert(rendered() == one, "the re-delivered wave was not applied exactly once")
+    // a crash after the step's commit but before the batch was marked
+    // done: without its commit-log entry the batch is re-delivered, and
+    // the guard empties it
+    val commits = Paths.get(ckpt, "commits")
+    val last = Files.list(commits).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Files.delete(commits.resolve(last))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    assert(run() > 0, "the committed batch was not re-delivered")
+    assert(rendered() == one, "a re-delivered batch was applied twice")
   }
 }
